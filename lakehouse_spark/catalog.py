@@ -402,13 +402,21 @@ class LakeCatalog:
         injection-safe front-end — parameters reach Catalyst as literals so
         constant folding and pushdown still apply).
 
-        DML statements (``INSERT INTO / UPDATE / DELETE FROM / MERGE INTO``
-        a registered TableStore name) route to the owning store's
-        transactional DML — file skipping, dv modes, CDF, and
-        snapshot-conflict detection all intact; see
-        :mod:`lakehouse_spark.sqldml` for the supported grammar. The
-        mutated view is refreshed to the new head. Returns the one-row
-        metrics frame ``(op, table, affected_rows)`` for DML."""
+        DML statements (``INSERT INTO|OVERWRITE / UPDATE / DELETE FROM /
+        MERGE INTO`` a registered TableStore name) are parsed by Spark's
+        own SQL parser and routed on the plan node to the owning store's
+        transactional DML — file skipping from the WHERE, dv modes, CDF
+        and snapshot-conflict detection all intact. Shapes the store
+        cannot express (PARTITION specs, conditional or column-list MERGE
+        inserts, scalar or correlated subqueries, a DELETE without WHERE,
+        ...) raise ``ValueError`` saying what to write instead; see
+        :mod:`lakehouse_spark.sqldml` for the routes. DML on dotted or
+        unregistered names goes to ``spark.sql``. The mutated view is
+        refreshed to the new head. Returns the one-row metrics frame
+        ``(op, table, affected_rows)`` for DML. Delta's maintenance
+        statements (DESCRIBE HISTORY/DETAIL, VACUUM, OPTIMIZE, RESTORE,
+        ALTER TABLE column/constraint forms, CTAS with LOCATION) route to
+        the store as well."""
         from lakehouse_spark import sqldml
 
         if sqldml.is_dml(query) or sqldml.is_util(query):

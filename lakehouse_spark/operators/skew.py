@@ -16,8 +16,13 @@ cluster does. Two standard techniques, both pure DataFrame ops:
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
+_exchange_noop_logged = False
 
 
 def spread(df: DataFrame, by: str | None = None) -> DataFrame:
@@ -62,6 +67,13 @@ def spread(df: DataFrame, by: str | None = None) -> DataFrame:
     # (EnsureRequirements runs per-stage at runtime), so test the wrapper
     # itself; with AQE off the Exchange nodes are in the string directly.
     if plan.startswith("AdaptiveSparkPlan") or "Exchange" in plan:
+        global _exchange_noop_logged
+        if not _exchange_noop_logged:
+            _exchange_noop_logged = True
+            _log.debug(
+                "spread: input plan already has an exchange; returned "
+                "unchanged (logged once per process)"
+            )
         return df
     # Exchange-free ⇒ not wrapped in AdaptiveSparkPlan ⇒ the probe is pure
     # scan-partition metadata (no job runs). Still forces physical planning

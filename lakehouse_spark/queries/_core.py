@@ -66,16 +66,6 @@ def _dsum(col, digits: int = 2):
     return F.round(F.sum(c.cast("decimal(18,4)")), digits).cast("double")
 
 
-def _davg(col, digits: int = 4):
-    """Order-independent rounded mean: exact decimal sum, one double
-    division (deterministic), then round. Mirrors
-    ``round(CAST(sum(CAST(x AS DECIMAL(18,4))) AS DOUBLE) / count(x), d)``."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(
-        F.sum(c.cast("decimal(18,4)")).cast("double") / F.count(c), digits
-    )
-
-
 def _ssum(col, digits: int = 2, scale: int = 10000):
     """Order-independent rounded sum at INT64 speed: the value is snapped to
     a 1/scale grid (exact for money/quantity columns with <= 4 decimal
@@ -132,24 +122,32 @@ def _dsum_sql(expr: str, digits: int = 2) -> str:
 
 
 def _savg_sql(expr: str, digits: int = 4, scale: int = 10000) -> str:
-    """Spark-safe SQL source of :func:`_savg` — CAST({scale} AS DOUBLE)
-    rather than a bare decimal literal, same reason as :func:`_ssum_sql`."""
+    """Order-independent rounded mean, as SQL that runs unchanged in Spark
+    and DuckDB (oracles use the same string). Values are snapped to a
+    1/scale grid and summed as bigint, exactly as in :func:`_ssum`; the
+    exact mean ``s / (n * scale)`` is then rounded HALF-UP (away from
+    zero) to ``digits`` IN INT64 — ``q * d`` with ``d = n * scale /
+    10^digits`` is ``|s|`` moved to the nearest multiple of ``d`` — and
+    divided back by one shared double division, so the result is the
+    double nearest the exactly rounded mean in both engines. Rounding the
+    double mean instead (``round(s / (n * scale), d)``) broke exact ties
+    differently per engine: a mean of 4721.59625 gave Spark 4721.5963 and
+    DuckDB 4721.5962. Exact for columns with <= 4 decimal digits; the
+    int64 bound is _ssum's. ``CAST(... AS DOUBLE)`` rather than a bare
+    decimal literal, same reason as :func:`_ssum_sql`."""
+    if scale % 10**digits:
+        raise ValueError(f"digits={digits} is finer than the 1/{scale} grid")
+    s = f"sum(CAST(round(({expr}) * {scale}) AS BIGINT))"
+    a = f"abs({s})"
+    d = f"(count({expr}) * {scale // 10**digits})"
+    x = f"({a} - {a} % {d} + CASE WHEN 2 * ({a} % {d}) >= {d} THEN {d} ELSE 0 END)"
     return (
-        f"round(sum(CAST(round(({expr}) * {scale}) AS BIGINT))"
-        f" / (CAST({scale} AS DOUBLE) * count({expr})), {digits})"
+        f"CAST(CASE WHEN {s} >= 0 THEN {x} ELSE -{x} END AS DOUBLE)"
+        f" / CAST(count({expr}) * {scale} AS DOUBLE)"
     )
 
 
-def _savg(col, digits: int = 4, scale: int = 10000):
-    """Scaled-int mean, same exactness argument as :func:`_ssum`; the single
-    double division is bit-identical across engines, and the final
-    ``round(double, d)`` does NOT carry _ssum's sf-bump hazard: a mean's
-    magnitude is data-valued (constant in sf), so it never grows into the
-    ~1e10+ range where engine round(double) implementations diverge — the
-    time bomb was group TOTALS growing with scale, which a /count cancels."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(
-        F.sum(F.round(c * scale).cast("long"))
-        / (F.lit(float(scale)) * F.count(c)),
-        digits,
-    )
+def _savg(col: str, digits: int = 4, scale: int = 10000):
+    """Column form of :func:`_savg_sql`."""
+    return F.expr(_savg_sql(col, digits, scale))
+

@@ -29,10 +29,10 @@ from lakehouse_spark.operators.sessionize import (
 )
 from lakehouse_spark.plans import closure
 from lakehouse_spark.queries._core import (
-    _davg,
     _dsum,
     _q,
     _savg,
+    _savg_sql,
     _ssum,
     _ssum_sql,
     _t,
@@ -73,10 +73,10 @@ def a2_running_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "a3_metrics_argmax",
-    """
+    f"""
     WITH agg AS (
       SELECT event_type, count(*) AS total,
-             round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) / count(value), 4) AS avg_value,
+             {_savg_sql("value")} AS avg_value,
              round(max(value), 4) AS max_value
       FROM events GROUP BY event_type
     ), ranked AS (
@@ -94,7 +94,7 @@ def a3_metrics_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.count("*").alias("total"),
-        _davg("value").alias("avg_value"),
+        _savg("value").alias("avg_value"),
         F.round(F.max("value"), 4).alias("max_value"),
         F.max(F.struct(F.col("value"), F.col("event_id"))).alias("__mx"),
     ).select(
@@ -976,7 +976,7 @@ def agg_outlier_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "rollup_interpolate",
-    """
+    f"""
     WITH bounds AS (
       SELECT CAST(min(ts) AS DATE) AS lo, CAST(max(ts) AS DATE) AS hi
       FROM events
@@ -985,8 +985,7 @@ def agg_outlier_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM bounds
     ), daily AS (
       SELECT CAST(ts AS DATE) AS day,
-             round(sum(CAST(round(value * 10000) AS BIGINT))
-                   / (10000.0 * count(value)), 4) AS v
+             {_savg_sql("value")} AS v
       FROM events WHERE event_type = 'error' AND value > 520
       GROUP BY 1
     ), j AS (

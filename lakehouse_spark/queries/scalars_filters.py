@@ -28,7 +28,6 @@ from lakehouse_spark.operators.sessionize import (
 )
 from lakehouse_spark.plans import closure
 from lakehouse_spark.queries._core import (
-    _davg,
     _dsum,
     _q,
     _savg,

@@ -29,10 +29,10 @@ from lakehouse_spark.operators.sessionize import (
 )
 from lakehouse_spark.plans import closure
 from lakehouse_spark.queries._core import (
-    _davg,
     _dsum,
     _q,
     _savg,
+    _savg_sql,
     _ssum,
     _ssum_sql,
     _t,
@@ -169,8 +169,8 @@ def j3_clone_remap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "j5_fk_lookup_chain",
-    """
-    SELECT r_name, n_name, count(*) AS n_cust, round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) / count(c_acctbal), 4) AS avg_bal
+    f"""
+    SELECT r_name, n_name, count(*) AS n_cust, {_savg_sql("c_acctbal")} AS avg_bal
     FROM customer
     JOIN nation ON c_nationkey = n_nationkey
     JOIN region ON n_regionkey = r_regionkey
@@ -186,7 +186,7 @@ def j5_fk_lookup_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = joins.fk_lookup(cust, nation, "c_nationkey", "n_nationkey", "inner")
     j = joins.fk_lookup(j, region, "n_regionkey", "r_regionkey", "inner")
     return j.groupBy("r_name", "n_name").agg(
-        F.count("*").alias("n_cust"), _davg("c_acctbal").alias("avg_bal")
+        F.count("*").alias("n_cust"), _savg("c_acctbal").alias("avg_bal")
     )
 
 

@@ -30,7 +30,6 @@ from lakehouse_spark.operators.sessionize import (
 from lakehouse_spark.plans import closure
 from lakehouse_spark.operators.skew import spread
 from lakehouse_spark.queries._core import (
-    _davg,
     _dsum,
     _dsum_sql,
     _q,
@@ -48,9 +47,9 @@ from lakehouse_spark.queries._core import (
            {_ssum_sql("l_quantity")} AS sum_qty,
            {_ssum_sql("l_extendedprice")} AS sum_base_price,
            {_ssum_sql("l_extendedprice * (1 - l_discount)")} AS sum_disc_price,
-           round(sum(CAST(round(l_quantity * 10000) AS BIGINT)) / (10000.0 * count(l_quantity)), 4) AS avg_qty,
-           round(sum(CAST(round(l_extendedprice * 10000) AS BIGINT)) / (10000.0 * count(l_extendedprice)), 4) AS avg_price,
-           round(sum(CAST(round(l_discount * 10000) AS BIGINT)) / (10000.0 * count(l_discount)), 4) AS avg_disc,
+           {_savg_sql("l_quantity")} AS avg_qty,
+           {_savg_sql("l_extendedprice")} AS avg_price,
+           {_savg_sql("l_discount")} AS avg_disc,
            count(*)                                                     AS count_order
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '2001-09-02'
@@ -183,7 +182,7 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("n_name")
         .agg(
             F.expr(
-                "round(sum(l_extendedprice * (1 - l_discount)), 2) as revenue"
+                f"{_dsum_sql('l_extendedprice * (1 - l_discount)')} as revenue"
             )
         )
     )
@@ -795,7 +794,7 @@ def tpch_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "tpch_q22_global_sales_opportunity",
-    """
+    f"""
     SELECT cntrycode, count(*) AS numcust,
            CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,4))), 2) AS DOUBLE)
              AS totacctbal
@@ -804,8 +803,7 @@ def tpch_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM customer
       WHERE right(c_name, 2) IN ('13','31','23','29','30','18','17')
         AND c_acctbal > (
-          SELECT round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE)
-                       / count(c_acctbal), 4)
+          SELECT {_savg_sql("c_acctbal")}
           FROM customer
           WHERE c_acctbal > 0.0
             AND right(c_name, 2) IN ('13','31','23','29','30','18','17'))
@@ -832,7 +830,7 @@ def tpch_q22_global_sales_opportunity(
     in_codes = cust.filter(F.col("cntrycode").isin(codes))
     threshold = (
         in_codes.filter(F.col("c_acctbal") > 0.0)
-        .agg(_davg("c_acctbal").alias("a"))
+        .agg(_savg("c_acctbal").alias("a"))
         .collect()[0]["a"]
     )
     orders = (

@@ -1,310 +1,231 @@
 """SQL DML routing for :class:`~lakehouse_spark.catalog.LakeCatalog`.
 
-Round 8 gave the catalog a SQL-by-name READ surface; this module closes
-the write half: ``cat.sql("DELETE FROM events WHERE day = 'd1'")`` routes
-to the owning :class:`~lakehouse_spark.mutation.store.TableStore`'s
-transactional DML (delete_where / update / merge / append) instead of
-failing in Spark's parser (temp views are not writable relations). The
-reference mutates every entity by name through its API
-(amplifier_library/sessions/manager.py:422-452 cascade delete;
-amplifierd/routers/sessions.py CRUD — read, not copied); a Spark user of
-a name-addressed catalog expects ``INSERT/UPDATE/DELETE/MERGE INTO
-<name>`` to work the same way.
+``cat.sql("DELETE FROM events WHERE day = 'd1'")`` on a registered
+TableStore name commits through that store's transactional DML (temp
+views are not writable in Spark), as the reference mutates every entity
+by name through its API (amplifier_library/sessions/manager.py).
 
-Supported statements (the subset the store's DML surface expresses; an
-unsupported shape raises ValueError with directions, never silently
-misparses):
+The grammar is Spark's own: each statement is parsed once by the
+session's SQL parser, read back with one ``toJSON()`` call and routed on
+the plan node. Text the store needs (the WHERE, SET values, MERGE
+conditions, subquery bodies) is sliced from the statement at the parser's
+recorded origin of the node that carries it, so quoting, comments and
+nesting are the parser's business.
 
-- ``INSERT INTO name [(cols)] VALUES (...), ...`` and
-  ``INSERT INTO name [(cols)] SELECT ...`` → ``TableStore.append``
-  (positional column mapping, store-assignment casts);
-  ``INSERT OVERWRITE [TABLE] name ...`` → ``TableStore.overwrite``
-  (full replace, Delta's partition-spec-less INSERT OVERWRITE);
-- ``DELETE FROM name WHERE cond`` → ``TableStore.delete_where`` — the
-  WHERE's prunable conjuncts (``col = lit``, ``col >=/<=/>/< lit``,
-  ``col BETWEEN a AND b``, ``col IN (...)``) are additionally extracted
-  into the store's stats-predicate dict, so file skipping works exactly
-  as it does through the Python API;
-- ``UPDATE name SET col = expr, ... [WHERE cond]`` →
-  ``TableStore.update`` (same predicate extraction);
-- DELETE/UPDATE WHERE clauses may contain SUBQUERY conjuncts (round 10,
-  Delta's documented subquery-in-condition surface): ``col [NOT] IN
-  (SELECT ...)`` and ``[NOT] EXISTS (SELECT ...)`` as top-level AND
-  terms. Subqueries resolve through the catalog (follow_head + inline
-  time travel apply). A DELETE whose whole WHERE is a positive
-  IN-subquery on the TABLE KEY routes to ``TableStore.delete_keys`` —
-  the frame joins distributed with key-stats segment skipping (the
-  reference's cascade delete as SQL); other shapes inline the bounded
-  value set as literals so file skipping and row-exact re-application
-  work unchanged. Correlated subqueries raise with directions;
-- ``MERGE INTO name [AS] t USING (subquery)|source_name [AS] s
-  ON t.<key> = s.<key>
-  [WHEN MATCHED [AND cond] THEN DELETE]
-  [WHEN MATCHED [AND cond] THEN UPDATE SET * | SET c = s.c, ...]
-  [WHEN NOT MATCHED THEN INSERT *]`` → ``TableStore.merge``.
+- ``InsertIntoStatement`` (``INSERT INTO|OVERWRITE [TABLE] name [(cols)]
+  VALUES ... | SELECT ... | TABLE src``) → ``append`` / ``overwrite``
+  (full replace; unlisted columns NULL-filled). PARTITION and BY NAME
+  raise.
+- ``DeleteFromTable`` → ``delete_where``; no WHERE (or WHERE TRUE) raises.
+- ``UpdateTable`` (``SET col = expr, ...``) → ``update``.
+- ``MergeIntoTable`` → ``merge`` for ``USING name | (subquery) ON
+  t.<key> = s.<key>`` with ``WHEN MATCHED [AND cond] THEN DELETE | UPDATE
+  SET * | UPDATE SET c = s.c, ...`` and ``WHEN NOT MATCHED THEN INSERT
+  *``; other ON, actions or clauses raise.
 
-Every route commits through the store's optimistic transaction —
-snapshot-conflict detection, deletion-vector modes untouched, CDF rows
-identical to the equivalent Python call (pytest-pinned in
-tests/test_sql_dml.py). After a successful mutation the catalog's view of
-the table is refreshed to the new head (pinned ``version=``/``as_of=``
-registrations are never mutable through SQL — that would edit history).
+The WHERE's prunable conjuncts (``col = lit``, ``col >=/<=/>/< lit``,
+``col BETWEEN a AND b``, ``col IN (lits)``) also become the store's
+stats-predicate dict, so file skipping works as through the Python API.
+``x [NOT] IN (SELECT ...)`` and ``[NOT] EXISTS (SELECT ...)`` may stand
+anywhere under AND/OR; their bodies run through the catalog (follow_head
+and inline time travel apply). A positive IN-subquery conjunct on the
+table key routes to ``delete_keys`` / ``update(keys=...)``; other
+subqueries are inlined as bounded literal lists or folded to TRUE/FALSE.
+Other subquery shapes raise with directions. Dotted or unregistered
+targets, and statements that parse into other nodes, go to ``spark.sql``.
 
-Results come back as a one-row DataFrame ``(op, table, affected_rows)``
-(affected_rows = -1 where the store API doesn't report a count), mirroring
-Delta's DML metrics output.
+Each route commits through the store's optimistic transaction (CDF rows
+identical to the Python call), refreshes the view (pinned registrations
+are never mutable) and returns one ``(op, table, affected_rows)`` row,
+-1 where the store reports no count.
 
-The MAINTENANCE half of Delta's SQL surface routes here too (is_util /
-route_util): ``DESCRIBE HISTORY|DETAIL <name>``, ``VACUUM <name> [RETAIN n
-VERSIONS] [DRY RUN]``, ``OPTIMIZE <name> [ZORDER BY (cols)]``, and
-``RESTORE <name> TO VERSION AS OF n | TO TIMESTAMP AS OF '<ts>'`` — each a
-thin parse over the corresponding TableStore method, returning its metrics
-as a DataFrame. Plain ``DESCRIBE <name>`` stays with Spark's parser.
-Round 9 additions: ``ALTER TABLE <name> RENAME COLUMN a TO b | DROP
-COLUMN c | ADD CONSTRAINT nm CHECK (expr) | DROP CONSTRAINT nm`` (the
-store's logical-schema plane; other ALTER forms and non-catalog names
-fall through to Spark) and ``CREATE [OR REPLACE] TABLE <name> [KEY k]
-[PARTITIONED BY (cols)] LOCATION '<path>' AS <select>`` (CTAS into a new
-TableStore root, registered under <name>). Inline SELECT-side time travel
-lives in the catalog's pre-pass (catalog._rewrite_time_travel), not here.
+Delta's maintenance statements (is_util / route_util: DESCRIBE
+HISTORY|DETAIL, VACUUM, OPTIMIZE, RESTORE, ALTER TABLE column/constraint
+forms, CTAS with KEY/LOCATION) are not in Spark's grammar, so each keeps a
+one-statement pattern. SELECT-side time travel is
+catalog._rewrite_time_travel.
 """
 
 from __future__ import annotations
 
+import json
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_DML_HEAD = re.compile(r"^\s*(INSERT|UPDATE|DELETE|MERGE)\b", re.I)
+_DML_HEAD = re.compile(
+    r"^\s*(?:(?:--[^\n]*(?:\n|$)|/\*.*?\*/)\s*)*(INSERT|UPDATE|DELETE|MERGE)\b",
+    re.I | re.S,
+)
+_IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
 
 
 def is_dml(query: str) -> bool:
     return bool(_DML_HEAD.match(query))
 
 
-# -- lexing helpers ----------------------------------------------------------
+# -- the parsed statement ------------------------------------------------------
 
 
-def _split_top(text: str, sep_word: str | None = None) -> list[str]:
-    """Split on top-level commas (sep_word=None) or a top-level keyword
-    (e.g. "AND"), respecting parentheses, single-quoted strings, and the
-    AND that belongs to a BETWEEN ... AND ... expression."""
-    parts: list[str] = []
-    depth = 0
-    i = 0
-    start = 0
-    n = len(text)
-    word = sep_word.upper() if sep_word else None
-    pending_between = False
-
-    def _is_word_at(idx: int, w: str) -> bool:
-        if text[idx : idx + len(w)].upper() != w:
-            return False
-        before = text[idx - 1] if idx else " "
-        after = text[idx + len(w)] if idx + len(w) < n else " "
-        return not (before.isalnum() or before == "_") and not (
-            after.isalnum() or after == "_"
-        )
-
-    while i < n:
-        c = text[i]
-        if c == "'":
-            i += 1
-            while i < n:
-                if text[i] == "'" and i + 1 < n and text[i + 1] == "'":
-                    i += 2  # escaped quote
-                elif text[i] == "'":
-                    break
-                else:
-                    i += 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            if word is None and c == ",":
-                parts.append(text[start:i])
-                start = i + 1
-            elif word is not None:
-                if _is_word_at(i, "BETWEEN"):
-                    pending_between = True
-                    i += len("BETWEEN")
-                    continue
-                if pending_between and _is_word_at(i, "AND"):
-                    # the AND of BETWEEN lo AND hi belongs to the term —
-                    # and ONLY an AND closes the BETWEEN. (When splitting
-                    # on OR, letting pending_between swallow the first OR
-                    # instead silently merged "x BETWEEN a AND b OR c"
-                    # into one part, defeating the top-level-OR guard.)
-                    pending_between = False
-                    i += len("AND")
-                    continue
-                if _is_word_at(i, word):
-                    parts.append(text[start:i])
-                    start = i + len(word)
-                    i += len(word)
-                    continue
-        i += 1
-    parts.append(text[start:])
-    return [p.strip() for p in parts if p.strip()]
+def _parse(spark, text: str, expression: bool = False):
+    """``(tree, jvm_node)`` for one statement (or one expression): the
+    nested-dict form of the parser's unresolved plan and the py4j handle
+    that origins are read from."""
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    node = parser.parseExpression(text) if expression else parser.parsePlan(text)
+    return _tree(json.loads(node.toJSON())), node
 
 
-_NUM_RE = re.compile(r"^[+-]?\d+(\.\d+)?([eE][+-]?\d+)?$")
-_STR_RE = re.compile(r"^'((?:[^']|'')*)'$", re.S)
-_TEMPORAL_RE = re.compile(r"^(?:DATE|TIMESTAMP)\s*'([^']*)'$", re.I)
-_IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
+def _tree(flat: list) -> dict:
+    """Nest ``TreeNode.toJSON``'s pre-order node list: each node's
+    children go under ``"kids"``, in order (the same order as the JVM
+    node's ``children()``)."""
+    nodes = iter(flat)
+
+    def build() -> dict:
+        n = next(nodes)
+        n["kids"] = [build() for _ in range(n["num-children"])]
+        return n
+
+    return build()
 
 
-def _backslash_escapes_on(spark) -> bool:
-    """Whether Spark's parser processes backslash escapes in string
-    literals — true under the DEFAULT conf
-    (spark.sql.parser.escapedStringLiterals=false). The literal writer
-    (_sql_literal) and reader (_literal) must both follow it, or a DML
-    over backslash-bearing strings targets the wrong rows."""
-    try:
-        return (
-            str(
-                spark.conf.get(
-                    "spark.sql.parser.escapedStringLiterals", "false"
-                )
-            ).lower()
-            != "true"
-        )
-    except Exception:
-        return True
+def _cls(n: dict) -> str:
+    return n["class"].rsplit(".", 1)[1]
 
 
-class _UndecodableEscape(ValueError):
-    """An escape form whose cross-engine value we can't reproduce exactly
-    (lone surrogate halves). The caller DECLINES to extract the conjunct —
-    no pruning from it, the row-exact WHERE still applies — rather than
-    prune with a value that differs from what Spark compares."""
+def _parts(v) -> list[str]:
+    """A name's parts as toJSON writes a Seq[String]: ``"[t, col]"``."""
+    return v[1:-1].split(", ") if isinstance(v, str) else list(v)
 
 
-def _unescape_backslashes(s: str) -> str:
-    r"""Decode backslash escapes the way Spark's default parser does
-    (ParserUtils.unescapeSQLString): named escapes map to their control
-    character, ``\%``/``\_`` keep the backslash (LIKE-pattern escapes),
-    any other escaped char drops the backslash."""
-    if "\\" not in s:
-        return s
-    named = {
-        "0": "\0", "'": "'", '"': '"', "b": "\b", "n": "\n",
-        "r": "\r", "t": "\t", "Z": "\x1a", "\\": "\\",
-    }
-    out = []
-    i, n = 0, len(s)
-    while i < n:
-        c = s[i]
-        if c == "\\" and i + 1 < n:
-            nxt = s[i + 1]
-            # \uXXXX (exactly 4 STRICT hex — int() alone also accepts
-            # whitespace/'+'/'_' forms Spark leaves undecoded) — probed
-            # against Spark 4.1: '\u0041' -> 'A', '\u004x' stays.
-            if nxt == "u" and i + 6 <= n:
-                hexs = s[i + 2 : i + 6]
-                if all(ch in "0123456789abcdefABCDEF" for ch in hexs):
-                    cp = int(hexs, 16)
-                    if 0xD800 <= cp <= 0xDBFF:
-                        # High surrogate: Spark (a JVM) pairs it with a
-                        # following \uDC00-\uDFFF into ONE astral code
-                        # point; lone Python surrogates would compare
-                        # differently from manifest-stats strings.
-                        j = i + 6
-                        if (
-                            j + 6 <= n
-                            and s[j] == "\\"
-                            and s[j + 1] == "u"
-                            and all(
-                                ch in "0123456789abcdefABCDEF"
-                                for ch in s[j + 2 : j + 6]
-                            )
-                            and 0xDC00 <= int(s[j + 2 : j + 6], 16) <= 0xDFFF
-                        ):
-                            lo = int(s[j + 2 : j + 6], 16)
-                            out.append(
-                                chr(
-                                    0x10000
-                                    + ((cp - 0xD800) << 10)
-                                    + (lo - 0xDC00)
-                                )
-                            )
-                            i = j + 6
-                            continue
-                        raise _UndecodableEscape(s)
-                    if 0xDC00 <= cp <= 0xDFFF:
-                        raise _UndecodableEscape(s)  # lone low surrogate
-                    out.append(chr(cp))
-                    i += 6
-                    continue
-            # \DDD: exactly 3 octal digits, first 0-1 (probed: \101->'A',
-            # \177->DEL, \200 and \377 stay undecoded, \10 stays).
-            if nxt in "01" and i + 4 <= n:
-                octs = s[i + 1 : i + 4]
-                if all(ch in "01234567" for ch in octs):
-                    out.append(chr(int(octs, 8)))
-                    i += 4
-                    continue
-            if nxt in named:
-                out.append(named[nxt])
-            elif nxt in "%_":
-                out.append("\\" + nxt)
-            else:
-                out.append(nxt)
-            i += 2
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
+def _name(n: dict) -> list[str]:
+    """A column reference's name parts; [] for any other expression."""
+    return _parts(n["nameParts"]) if _cls(n) == "UnresolvedAttribute" else []
 
 
-def _literal(tok: str, backslash_escapes: bool = True):
-    """Parse a SQL literal into the store-predicate value domain (numbers,
-    strings; DATE/TIMESTAMP literals degrade to their ISO string, which is
-    how the manifest stores partition values). Returns (ok, value).
-    ``backslash_escapes`` mirrors the session parser: the predicate value
-    must equal what F.expr's parse of the SAME literal compares against,
-    or stats/bloom pruning and the extracted-predicate conjunct silently
-    miss the matching rows."""
-    tok = tok.strip()
-    if _NUM_RE.match(tok):
-        # Integer-shaped tokens parse as int DIRECTLY — routing through
-        # float silently corrupts values above 2^53 (64-bit ids), and a
-        # corrupted bound makes stats pruning skip the matching file.
-        if "." not in tok and "e" not in tok.lower():
-            return True, int(tok)
-        return True, float(tok)
-    m = _STR_RE.match(tok)
-    if m:
-        v = m.group(1).replace("''", "'")
-        if backslash_escapes:
-            try:
-                v = _unescape_backslashes(v)
-            except _UndecodableEscape:
-                return False, None  # conjunct not extracted; WHERE exact
-        return True, v
-    m = _TEMPORAL_RE.match(tok)
-    if m:
-        return True, m.group(1)
-    return False, None
+def _column(n: dict) -> str | None:
+    """The column an unqualified attribute names, else None."""
+    parts = _name(n)
+    return parts[0] if len(parts) == 1 else None
 
 
-def extract_predicate(where: str, backslash_escapes: bool = True) -> dict:
-    """Prunable conjuncts of a WHERE clause as the store's stats-predicate
-    dict — BEST-EFFORT and conservative: a conjunct that doesn't match one
-    of the simple shapes is simply not extracted (the full WHERE is always
-    re-applied row-exactly by the DML path, so extraction can only ever
-    SKIP more files, never change results). Strict bounds widen to closed
-    ones for the same reason.
+# Expression nodes whose recorded origin covers exactly their own text. A
+# predicate's origin starts at its keyword (IN, BETWEEN, LIKE, IS ...),
+# after its left operand, so other nodes extend to their first child.
+_WHOLE_SPAN = {
+    "And", "Or", "EqualTo", "LessThan", "LessThanOrEqual", "GreaterThan",
+    "GreaterThanOrEqual", "UnresolvedAttribute", "Literal",
+}
 
-    A TOP-LEVEL OR disables extraction entirely: SQL precedence makes
-    ``A AND B OR C`` mean ``(A AND B) OR C``, so treating A as a standalone
-    conjunct would prune files that only match C — unsound (silently
-    undeleted/unupdated rows). Parenthesized ORs inside a conjunct are fine
-    (the conjunct just fails the simple-shape match and is skipped)."""
-    if len(_split_top(where, "OR")) > 1:
-        return {}
+
+def _is_bool(n: dict) -> bool:
+    # TRUE and FALSE parse to shared singleton literals, whose origin
+    # points into whichever statement first created them.
+    return _cls(n) == "Literal" and n["dataType"] == "boolean"
+
+
+def _span(jnode, node: dict | None = None) -> tuple[int, int]:
+    """``[start, stop)`` of the statement text the parser recorded for a
+    node; pass the expression's ``node`` dict to cover a predicate's left
+    operand. A wrapper's origin can span more than its own text (the
+    MERGE source's SubqueryAlias and an EXISTS inherit the enclosing
+    clause's), so callers take the span of the node that holds the text."""
+    ctx = jnode.origin().context()
+    start, stop = ctx.startIndex(), ctx.stopIndex() + 1
+    if node and node["kids"] and _cls(node) not in _WHOLE_SPAN:
+        first = node["kids"][0]
+        if not _is_bool(first):
+            start = min(start, _span(jnode.children().apply(0), first)[0])
+    return start, stop
+
+
+def _text(q: str, jnode, node: dict | None = None) -> str:
+    if node and _is_bool(node):
+        return node["value"]
+    start, stop = _span(jnode, node)
+    return q[start:stop]
+
+
+def _child(jnode, path: tuple[int, ...]):
+    for i in path:
+        jnode = jnode.children().apply(i)
+    return jnode
+
+
+def _render(q: str, jnode, node: dict, subst: dict, path: tuple = ()) -> str:
+    """A condition's text with the subtree at each path in ``subst``
+    replaced by the given SQL. Only the AND/OR nodes above a replacement
+    are rebuilt (operands parenthesized); every other subtree is sliced
+    from the statement, so a replaced term's own text is never needed."""
+    if path in subst:
+        return subst[path]
+    if not any(p[: len(path)] == path for p in subst):
+        return _text(q, jnode, node)
+    op = f" {_cls(node).upper()} "
+    return op.join(
+        f"({_render(q, jnode.children().apply(i), k, subst, path + (i,))})"
+        for i, k in enumerate(node["kids"])
+    )
+
+
+def _target(plan: dict) -> str | None:
+    """The single-part table name a DML plan writes, else None."""
+    t = plan.get("table", plan.get("targetTable"))
+    if t is None:
+        return None
+    t = plan["kids"][t] if isinstance(t, int) else _tree(t)
+    while _cls(t) == "SubqueryAlias":
+        t = t["kids"][0]
+    if _cls(t) != "UnresolvedRelation":
+        return None
+    parts = _parts(t["multipartIdentifier"])
+    return parts[0] if len(parts) == 1 else None
+
+
+# -- WHERE analysis ------------------------------------------------------------
+
+
+def _conjuncts(n: dict, path: tuple[int, ...] = ()) -> list:
+    """``(path, node)`` of each top-level AND term of a condition."""
+    if _cls(n) != "And":
+        return [(path, n)]
+    return [c for i, k in enumerate(n["kids"]) for c in _conjuncts(k, path + (i,))]
+
+
+_INT_TYPES = ("integer", "long", "short", "byte")
+_RANGE_SIDE = {"GreaterThanOrEqual": "lo", "GreaterThan": "lo",
+               "LessThanOrEqual": "hi", "LessThan": "hi"}
+
+
+def _value(n: dict):
+    """A literal in the store-predicate value domain: numbers, strings,
+    and DATE/TIMESTAMP literals as their text (how the manifest stores
+    partition values). The parser has already decoded the literal under
+    the session's ``escapedStringLiterals`` setting, so the value is
+    exactly what Spark compares. None for anything else (NULL, booleans,
+    binary, intervals, expressions): not extracted."""
+    if _cls(n) != "Literal" or n["value"] is None:
+        return None
+    t, v = n["dataType"], n["value"]
+    if t in _INT_TYPES:
+        return int(v)
+    if t.startswith("decimal"):
+        # Scale-0 decimals (integers past the long range) stay exact ints.
+        return int(v) if v.lstrip("-").isdigit() else float(v)
+    if t in ("double", "float"):
+        return float(v)
+    return v if t in ("string", "date", "timestamp", "timestamp_ntz") else None
+
+
+def _predicate(conjuncts) -> dict:
+    """Prunable conjuncts as the store's stats-predicate dict — best-effort
+    and conservative: a conjunct of any other shape is not extracted (the
+    DML path re-applies the full WHERE row-exactly, so extraction can only
+    skip more files, never change results). Strict bounds widen to closed
+    ones for the same reason. A top-level OR is one conjunct of no simple
+    shape, so ``A AND B OR C`` — ``(A AND B) OR C`` — extracts nothing."""
     out: dict = {}
 
     def _merge_range(col: str, lo=None, hi=None):
@@ -316,61 +237,71 @@ def extract_predicate(where: str, backslash_escapes: bool = True) -> dict:
             cur_hi = hi if cur_hi is None else min(cur_hi, hi)
         out[col] = (cur_lo, cur_hi)
 
-    for conj in _split_top(where, "AND"):
-        m = re.match(
-            rf"^({_IDENT})\s*(=|>=|<=|>|<)\s*(.+)$", conj.strip(), re.S
-        )
-        if m:
-            ok, v = _literal(m.group(3), backslash_escapes)
-            if not ok:
-                continue
-            col, op = m.group(1), m.group(2)
+    for n in conjuncts:
+        c, kids = _cls(n), n["kids"]
+        col = _column(kids[0]) if kids else None
+        vals = [_value(k) for k in kids[1:]]
+        if col is None or not vals or None in vals:
+            continue
+        if c == "EqualTo" or c in _RANGE_SIDE:
             if col in out and not isinstance(out[col], tuple):
                 continue  # already an IN/equality; keep the tighter form
-            if op == "=":
-                if col not in out:
-                    out[col] = v
-            elif op in (">=", ">"):
-                _merge_range(col, lo=v)
+            if c == "EqualTo":
+                out.setdefault(col, vals[0])
             else:
-                _merge_range(col, hi=v)
-            continue
-        m = re.match(
-            rf"^({_IDENT})\s+BETWEEN\s+(.+?)\s+AND\s+(.+)$",
-            conj.strip(),
-            re.I | re.S,
-        )
-        if m:
-            ok1, lo = _literal(m.group(2), backslash_escapes)
-            ok2, hi = _literal(m.group(3), backslash_escapes)
-            if ok1 and ok2:
-                _merge_range(m.group(1), lo=lo, hi=hi)
-            continue
-        m = re.match(
-            rf"^({_IDENT})\s+IN\s*\((.+)\)$", conj.strip(), re.I | re.S
-        )
-        if m and m.group(1) not in out:
-            vals = []
-            good = True
-            for tok in _split_top(m.group(2)):
-                ok, v = _literal(tok, backslash_escapes)
-                if not ok:
-                    good = False
-                    break
-                vals.append(v)
-            if good and vals:
-                out[m.group(1)] = vals
+                _merge_range(col, **{_RANGE_SIDE[c]: vals[0]})
+        elif c == "UnresolvedFunction" and n["nameParts"] == "[between]":
+            _merge_range(col, lo=vals[0], hi=vals[1])
+        elif c == "In" and col not in out:
+            out[col] = vals
     return out
 
 
-# -- routing -----------------------------------------------------------------
+def extract_predicate(where: str) -> dict:
+    """Prunable conjuncts of a WHERE clause (see :func:`_predicate`),
+    parsed by the active session's SQL parser."""
+    cond, _ = _parse(SparkSession.active(), where, expression=True)
+    return _predicate(n for _, n in _conjuncts(cond))
+
+
+_SUBQUERY = ("InSubquery", "Exists")
+
+
+def _has_subquery(n: dict) -> bool:
+    return "plan" in n or any(_has_subquery(k) for k in n["kids"])
+
+
+def _subquery_terms(n: dict, path: tuple[int, ...] = ()) -> list:
+    """``(path, term, subquery)`` of each ``x [NOT] IN (SELECT ...)`` /
+    ``[NOT] EXISTS (SELECT ...)`` reachable from the condition's root
+    through AND/OR only; ``term`` is the NOT when negated, else the
+    subquery node itself. Any other subquery raises (never misroutes)."""
+    c = _cls(n)
+    if c in ("And", "Or"):
+        return [
+            t for i, k in enumerate(n["kids"]) for t in _subquery_terms(k, path + (i,))
+        ]
+    neg = c == "Not" and _cls(n["kids"][0]) in _SUBQUERY
+    sub = n["kids"][0] if neg else n
+    # InSubquery's children are its values then the ListQuery: one value.
+    if _cls(sub) in _SUBQUERY and len(sub["kids"]) <= 2:
+        return [(path, n, sub)]
+    if _has_subquery(n):
+        raise ValueError(
+            "unsupported subquery shape in WHERE; supported: x [NOT] IN "
+            "(SELECT ...) and [NOT] EXISTS (SELECT ...) combined with "
+            "AND/OR (scalar subqueries, and subqueries under NOT or "
+            "inside expressions, are not)"
+        )
+    return []
+
+
+# -- routing -------------------------------------------------------------------
 
 
 def _result(spark, op: str, table: str, affected: int) -> DataFrame:
-    return spark.createDataFrame(
-        [(op, table, affected)],
-        "op string, table string, affected_rows long",
-    )
+    schema = "op string, table string, affected_rows long"
+    return spark.createDataFrame([(op, table, affected)], schema)
 
 
 def _writable_store(cat, name: str):
@@ -401,70 +332,50 @@ def _refresh_after(cat, name: str) -> None:
 def route(cat, query: str) -> DataFrame:
     """Dispatch one DML statement against the catalog. ``cat`` is the
     LakeCatalog (gives name→store resolution and the SparkSession)."""
-    verb = _DML_HEAD.match(query).group(1).upper()
-    q = query.strip().rstrip(";").strip()
-    # Route only statements whose target is a CATALOG registration.
-    # Dotted/backticked names and unknown identifiers belong to Spark's
-    # own catalog — pass them through untouched (same fall-through the
-    # ALTER branch of route_util uses) instead of hijacking them into
-    # shape errors.
-    target_pat = {
-        "INSERT": r"^INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?"
-        r"([A-Za-z_][\w.]*|`[^`]+`)",
-        "DELETE": r"^DELETE\s+FROM\s+([A-Za-z_][\w.]*|`[^`]+`)",
-        "UPDATE": r"^UPDATE\s+([A-Za-z_][\w.]*|`[^`]+`)",
-        "MERGE": r"^MERGE\s+INTO\s+([A-Za-z_][\w.]*|`[^`]+`)",
-    }[verb]
-    tm = re.match(target_pat, q, re.I)
-    if not tm or tm.group(1) not in cat._entries:
-        # The pre-passes still apply: a Spark-native INSERT target can
-        # SELECT from registered follow_head / time-travel names, and
-        # those reads keep the same contract as any other cat.sql read.
+    plan, jplan = _parse(cat.spark, query)
+    name = _target(plan)
+    if name not in cat._entries:
+        # Dotted names, unknown identifiers and target-less statements
+        # belong to Spark's own catalog. The pre-passes still apply: a
+        # Spark-native INSERT target can SELECT from registered
+        # follow_head / time-travel names, and those reads keep the same
+        # contract as any other cat.sql read.
         cat._refresh_followers(query)
         return cat.spark.sql(cat._rewrite_time_travel(query))
-    if verb == "INSERT":
-        return _insert(cat, q)
-    if verb == "DELETE":
-        return _delete(cat, q)
-    if verb == "UPDATE":
-        return _update(cat, q)
-    return _merge(cat, q)
+    handler = _ROUTES.get(_cls(plan))
+    if handler is None:
+        raise ValueError(
+            f"unsupported statement on {name!r}: supported are INSERT "
+            "INTO|OVERWRITE <name> [(cols)] VALUES ... | SELECT ..., "
+            "UPDATE <name> SET ..., DELETE FROM <name> WHERE ... and MERGE "
+            "INTO <name> ... (see lakehouse_spark.sqldml)"
+        )
+    return handler(cat, query, plan, jplan, name)
 
 
-def _insert(cat, q: str) -> DataFrame:
-    m = re.match(
-        rf"^INSERT\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?({_IDENT})\s*"
-        r"(?:\(([^)]*)\)\s*)?"
-        r"(VALUES\b.*|SELECT\b.*|TABLE\b.*)$",
-        q,
-        re.I | re.S,
-    )
-    if not m:
+def _insert(cat, q: str, plan: dict, jplan, name: str) -> DataFrame:
+    if plan["byName"] or not jplan.partitionSpec().isEmpty():
         raise ValueError(
             "unsupported INSERT shape; use INSERT INTO|OVERWRITE <name> "
             "[(cols)] VALUES (...) | SELECT ..."
         )
-    mode, name, collist, body = (
-        m.group(1).upper(),
-        m.group(2),
-        m.group(3),
-        m.group(4),
-    )
     store = _writable_store(cat, name)
     spark = cat.spark
-    if body.upper().startswith("VALUES"):
-        src = spark.sql(f"SELECT * FROM {body}")
+    body, text = plan["kids"][0], _text(q, jplan.query())
+    if _cls(body) in ("LocalRelation", "UnresolvedInlineTable"):
+        src = spark.sql(f"SELECT * FROM {text}")
     else:
         # Through cat.sql, not raw spark.sql: the SELECT body then gets
         # follow_head re-resolution and inline VERSION/TIMESTAMP AS OF,
         # the same contract every read through the catalog has.
-        src = cat.sql(body)
+        is_table = _cls(body) == "UnresolvedRelation"  # INSERT ... TABLE src
+        src = cat.sql(f"SELECT * FROM {text}" if is_table else text)
     tschema = store.read().schema  # one plan build serves columns + types
-    target = (
-        [c.strip() for c in collist.split(",")]
-        if collist
-        else list(tschema.names)
-    )
+    collist = []
+    if plan["userSpecifiedCols"]:
+        cols = jplan.userSpecifiedCols()
+        collist = [cols.apply(i) for i in range(cols.size())]
+    target = collist or list(tschema.names)
     # An explicit column list must name real table columns (Delta raises
     # an analysis error for unknown INSERT columns). Without this, the
     # OVERWRITE null-fill's final `.select(*tschema.names)` would
@@ -485,12 +396,10 @@ def _insert(cat, q: str) -> DataFrame:
     # genuinely incompatible types still fail the append's enforcement).
     ttypes = {f.name: f.dataType for f in tschema}
     src = src.select(
-        *[
-            F.col(c).cast(ttypes[c]).alias(c) if c in ttypes else F.col(c)
-            for c in src.columns
-        ]
+        *[F.col(c).cast(ttypes[c]).alias(c) if c in ttypes else c for c in src.columns]
     )
-    if mode == "OVERWRITE":
+    overwrite = plan["overwrite"]
+    if overwrite:
         # NULL-fill unlisted table columns (Delta's INSERT OVERWRITE with
         # a column list): overwrite() is full CREATE OR REPLACE, so a
         # partial column list would otherwise silently DROP every
@@ -498,16 +407,12 @@ def _insert(cat, q: str) -> DataFrame:
         # — a narrow segment null-fills at read time by schema union.
         missing = [c for c in tschema.names if c not in src.columns]
         if missing:
-            src = src.select(
-                "*",
-                *[
-                    F.lit(None).cast(ttypes[c]).alias(c) for c in missing
-                ],
-            ).select(*tschema.names)
+            nulls = [F.lit(None).cast(ttypes[c]).alias(c) for c in missing]
+            src = src.select("*", *nulls).select(*tschema.names)
     src = src.persist()
     try:
         n = src.count()
-        if mode == "OVERWRITE":
+        if overwrite:
             # Full-replace semantics (Delta's INSERT OVERWRITE without a
             # partition spec): the new version holds exactly the source.
             store.overwrite(src)
@@ -516,10 +421,9 @@ def _insert(cat, q: str) -> DataFrame:
     finally:
         src.unpersist()
     _refresh_after(cat, name)
-    return _result(spark, f"INSERT {mode}" if mode == "OVERWRITE" else "INSERT", name, n)
+    return _result(spark, "INSERT OVERWRITE" if overwrite else "INSERT", name, n)
 
 
-_QUOTED_RE = re.compile(r"'(?:[^']|'')*'")
 # Above this many distinct subquery values the inline rewrite would hand
 # Catalyst a giant literal IN-list (and collect them all to the driver
 # first) — the scale path for key-set deletes is delete_keys, which joins
@@ -527,18 +431,13 @@ _QUOTED_RE = re.compile(r"'(?:[^']|'')*'")
 _SUBQ_INLINE_CAP = 10_000
 
 
-def _mask_quotes(text: str) -> str:
-    """Blank the CONTENT of string literals (keeping length/quotes) so
-    structural regex scans can't match inside them."""
-    return _QUOTED_RE.sub(
-        lambda m: "'" + " " * (len(m.group(0)) - 2) + "'", text
-    )
-
-
-def has_where_subquery(where: str | None) -> bool:
-    return bool(where) and bool(
-        re.search(r"\(\s*SELECT\b", _mask_quotes(where), re.I)
-    )
+def _backslash_escapes_on(spark) -> bool:
+    """Whether Spark's parser processes backslash escapes in string
+    literals (the default, escapedStringLiterals=false). The literal
+    writer (_sql_literal) must follow it, or a DML over backslash-bearing
+    strings targets the wrong rows."""
+    conf = spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
+    return str(conf).lower() != "true"
 
 
 def _sql_literal(v, backslash_escapes: bool = True) -> str:
@@ -587,52 +486,19 @@ def _sql_literal(v, backslash_escapes: bool = True) -> str:
     return f"'{s}'"
 
 
-def _parse_where_term(term: str):
-    """Classify one top-level AND conjunct: ("plain", text) — no subquery;
-    ("in", col, subsql, negated) — ``col [NOT] IN (SELECT ...)``;
-    ("exists", subsql, negated) — ``[NOT] EXISTS (SELECT ...)``. Any
-    OTHER conjunct containing a subquery raises (never misparses): the
-    supported grammar is Delta's documented DELETE/UPDATE-with-subquery
-    surface, as top-level AND conjuncts."""
-    if not re.search(r"\(\s*SELECT\b", _mask_quotes(term), re.I):
-        return ("plain", term)
-    m = re.match(rf"^({_IDENT})\s+(NOT\s+)?IN\s*\(", term, re.I)
-    if m:
-        start = m.end() - 1
-        end = start + _balanced_paren(term[start:])
-        if term[end:].strip():
-            raise ValueError(
-                f"unsupported trailing text after IN-subquery in {term!r}"
-            )
-        inner = term[start + 1 : end - 1].strip()
-        if re.match(r"^SELECT\b", inner, re.I):
-            return ("in", m.group(1), inner, bool(m.group(2)))
-    m = re.match(r"^(NOT\s+)?EXISTS\s*\(", term, re.I)
-    if m:
-        start = m.end() - 1
-        end = start + _balanced_paren(term[start:])
-        if term[end:].strip():
-            raise ValueError(
-                f"unsupported trailing text after EXISTS in {term!r}"
-            )
-        inner = term[start + 1 : end - 1].strip()
-        return ("exists", inner, bool(m.group(1)))
-    raise ValueError(
-        f"unsupported subquery shape in WHERE conjunct {term!r}; "
-        "supported: col [NOT] IN (SELECT ...) and [NOT] EXISTS "
-        "(SELECT ...) as top-level AND conjuncts"
-    )
-
-
-def _subquery_values(cat, subsql: str) -> list:
-    """Evaluate an uncorrelated single-column subquery through the
-    catalog (follow_head and inline time travel apply) to a bounded list
-    of distinct values."""
-    sub = cat.sql(subsql)
+def _in_subquery(cat, q: str, jsub) -> DataFrame:
+    """An IN-subquery's body through the catalog (follow_head and inline
+    time travel apply); it must return one column."""
+    sub = cat.sql(_text(q, jsub.query().plan()))
     if len(sub.columns) != 1:
         raise ValueError(
             f"IN subquery must return exactly one column, got {sub.columns}"
         )
+    return sub
+
+
+def _subquery_values(sub: DataFrame) -> list:
+    """An uncorrelated subquery's distinct values, bounded."""
     rows = sub.distinct().limit(_SUBQ_INLINE_CAP + 1).collect()
     if len(rows) > _SUBQ_INLINE_CAP:
         raise ValueError(
@@ -664,353 +530,233 @@ def _eval_exists(cat, subsql: str) -> bool:
         ) from ex
 
 
-def _inline_where_subqueries(
-    cat, where: str, bs: bool | None = None
-) -> tuple[str | None, bool]:
-    """Rewrite every subquery conjunct of ``where`` into literal form:
-    IN-subqueries become inline IN-lists (so extract_predicate recovers
-    file skipping and delete_where/update re-apply the condition
-    row-exactly), EXISTS terms fold to constants. Returns
-    ``(rewritten_where, provably_empty)`` — provably_empty means no row
-    can satisfy the WHERE (e.g. NOT IN over a NULL-bearing set, SQL's
-    three-valued semantics) and the DML affects zero rows.
+def _in_literal(col: str, vals: list, neg: bool, bs: bool) -> str:
+    """The literal form of ``col [NOT] IN (<vals>)``."""
+    if not neg:
+        vals = [v for v in vals if v is not None]  # NULL never IN-matches
+        if not vals:
+            return "FALSE"
+        return f"{col} IN ({', '.join(_sql_literal(v, bs) for v in vals)})"
+    if any(v is None for v in vals):
+        # x NOT IN (set containing NULL) is never TRUE (NULL or FALSE for
+        # every x) — Delta/Spark's documented NOT IN semantics.
+        return "FALSE"
+    if not vals:
+        return "TRUE"  # NOT IN over an EMPTY set is TRUE for every x
+    lits = ", ".join(_sql_literal(v, bs) for v in vals)
+    return f"({col} IS NOT NULL AND {col} NOT IN ({lits}))"
 
-    Substitution is strictly IN PLACE — each AND-split part is rewritten
-    to a constant or literal form and the parts are rejoined with the
-    same " AND " tokens the split removed, so the string round-trips and
-    SQL precedence is preserved even when another part carries a
-    top-level OR (``sub AND a OR b`` means ``(sub AND a) OR b``: a
-    never-true subquery there must become a literal FALSE factor, NOT a
-    whole-statement short-circuit — the OR branch still matches rows).
-    The affects-zero-rows fast path applies only when no part has a
-    top-level OR, where a FALSE conjunct really does kill the WHERE."""
-    if bs is None:
-        bs = _backslash_escapes_on(cat.spark)
-    parts: list[str] = []
-    has_or = False
-    for term in _split_top(where, "AND"):
-        if len(_split_top(term, "OR")) > 1:
-            has_or = True
-        parsed = _parse_where_term(term)
-        if parsed[0] == "plain":
-            parts.append(term)
-            continue
-        if parsed[0] == "exists":
-            _, subsql, neg = parsed
-            nonempty = _eval_exists(cat, subsql)
-            truth = (not nonempty) if neg else nonempty
-            parts.append("TRUE" if truth else "FALSE")
-            continue
-        _, col, subsql, neg = parsed
-        vals = _subquery_values(cat, subsql)
-        if not neg:
-            vals = [v for v in vals if v is not None]  # NULL never IN-matches
-            if not vals:
-                parts.append("FALSE")
-                continue
-            lits = ", ".join(_sql_literal(v, bs) for v in vals)
-            parts.append(f"{col} IN ({lits})")
+
+def _inline_subqueries(cat, q: str, jcond, cond: dict, terms: list, top: set):
+    """The WHERE text with every subquery term replaced by its literal
+    form — IN-subqueries become IN-lists (so extract_predicate recovers
+    file skipping and the store re-applies the condition row-exactly),
+    EXISTS folds to TRUE/FALSE — or None when a top-level conjunct (path
+    in ``top``) folded to FALSE, so no row can match.
+
+    Each term sits under AND/OR only (_subquery_terms), where FALSE may
+    stand for SQL's NULL (x IN a NULL-bearing set): AND/OR never turn a
+    NULL operand into a TRUE result that FALSE would not also give."""
+    bs = _backslash_escapes_on(cat.spark)
+    subst = {}
+    for path, term, sub in terms:
+        neg = term is not sub
+        jsub = _child(jcond, path)
+        jsub = jsub.child() if neg else jsub
+        if _cls(sub) == "Exists":
+            truth = _eval_exists(cat, _text(q, jsub.plan())) != neg
+            subst[path] = "TRUE" if truth else "FALSE"
         else:
-            if any(v is None for v in vals):
-                # x NOT IN (set containing NULL) is never TRUE (NULL or
-                # FALSE for every x) — a constant-FALSE factor.
-                # Delta/Spark's documented NOT IN semantics.
-                parts.append("FALSE")
-            elif vals:
-                lits = ", ".join(_sql_literal(v, bs) for v in vals)
-                parts.append(
-                    f"({col} IS NOT NULL AND {col} NOT IN ({lits}))"
-                )
-            else:
-                # NOT IN over an EMPTY set is TRUE for every x.
-                parts.append("TRUE")
-    if not has_or and "FALSE" in parts:
-        return None, True
-    return (" AND ".join(parts) if parts else "TRUE"), False
+            col = _text(q, jsub.children().apply(0), sub["kids"][0])
+            vals = _subquery_values(_in_subquery(cat, q, jsub))
+            subst[path] = _in_literal(col, vals, neg, bs)
+        if subst[path] == "FALSE" and path in top:
+            return None
+    return _render(q, jcond, cond, subst)
 
 
-def _delete(cat, q: str) -> DataFrame:
-    m = re.match(
-        rf"^DELETE\s+FROM\s+({_IDENT})\s*(?:WHERE\s+(.+))?$", q, re.I | re.S
-    )
-    if not m:
-        raise ValueError("unsupported DELETE shape; use DELETE FROM <name> WHERE <cond>")
-    name, where = m.group(1), m.group(2)
+def _route_where(cat, q: str, jcond, cond: dict, key: str, whole: bool):
+    """``(where, predicate, keys)`` for the store call, or None when no
+    row can match. ``keys`` is set on the key route: a positive
+    IN-subquery on the TABLE KEY that is a top-level conjunct (the whole
+    WHERE when ``whole``) becomes a frame of keys the store semi-joins
+    distributed — key-stats segment skipping, no driver materialization
+    and no inline cap, the reference's cascade delete as SQL
+    (amplifier_library/sessions/manager.py:422-452); the remaining
+    conjuncts ride along as the row filter."""
+    conjs = _conjuncts(cond)
+    terms = _subquery_terms(cond)
+    top = {p for p, _ in conjs}
+    path, term, sub = terms[0] if len(terms) == 1 else (None, None, None)
+    if (
+        path in top
+        and (path == () or not whole)
+        and _cls(term) == "InSubquery"
+        and _column(sub["kids"][0]) == key
+    ):
+        keys = _in_subquery(cat, q, _child(jcond, path)).toDF(key)
+        rest = [n for p, n in conjs if p != path]
+        if not rest:
+            return None, None, keys
+        return _render(q, jcond, cond, {path: "TRUE"}), _predicate(rest), keys
+    if terms:
+        where = _inline_subqueries(cat, q, jcond, cond, terms, top)
+        return where and (where, extract_predicate(where), None)
+    return _text(q, jcond, cond), _predicate(n for _, n in conjs), None
+
+
+def _delete(cat, q: str, plan: dict, jplan, name: str) -> DataFrame:
     store = _writable_store(cat, name)
-    bs = _backslash_escapes_on(cat.spark)  # one conf read per statement
-    if where is None:
+    cond = _tree(plan["condition"])
+    if _cls(cond) == "Literal" and cond["value"] == "true":
         raise ValueError(
             "DELETE with no WHERE would drop every row; use "
             "store.overwrite() with an empty frame if that is really meant"
         )
-    if has_where_subquery(where):
-        terms = [_parse_where_term(t) for t in _split_top(where, "AND")]
-        if (
-            len(terms) == 1
-            and terms[0][0] == "in"
-            and not terms[0][3]
-            and terms[0][1] == store.key
-        ):
-            # The reference's cascade delete as SQL (an id-set delete,
-            # amplifier_library/sessions/manager.py:422-452): a single
-            # positive IN-subquery on the TABLE KEY routes to
-            # delete_keys, which joins the frame DISTRIBUTED (key-stats
-            # segment skipping, no driver materialization) — the scale
-            # path for arbitrarily large key sets.
-            keys = cat.sql(terms[0][2])
-            if len(keys.columns) != 1:
-                raise ValueError(
-                    "IN subquery must return exactly one column, got "
-                    f"{keys.columns}"
-                )
-            n = store.delete_keys(keys.toDF(store.key))
-            _refresh_after(cat, name)
-            return _result(cat.spark, "DELETE", name, n)
-        where, empty = _inline_where_subqueries(cat, where, bs=bs)
-        if empty:
-            return _result(cat.spark, "DELETE", name, 0)
-    pred = extract_predicate(where, bs)
-    n = store.delete_where(where=where, predicate=pred or None)
+    routed = _route_where(cat, q, jplan.condition(), cond, store.key, True)
+    if routed is None:
+        return _result(cat.spark, "DELETE", name, 0)
+    where, pred, keys = routed
+    if keys is not None:
+        n = store.delete_keys(keys)
+    else:
+        n = store.delete_where(where=where, predicate=pred or None)
     _refresh_after(cat, name)
     return _result(cat.spark, "DELETE", name, n)
 
 
-def _update(cat, q: str) -> DataFrame:
-    m = re.match(
-        rf"^UPDATE\s+({_IDENT})\s+SET\s+(.+?)(?:\s+WHERE\s+(.+))?$",
-        q,
-        re.I | re.S,
-    )
-    if not m:
-        raise ValueError(
-            "unsupported UPDATE shape; use UPDATE <name> SET c = expr, ... "
-            "[WHERE <cond>]"
-        )
-    name, set_text, where = m.group(1), m.group(2), m.group(3)
+def _update(cat, q: str, plan: dict, jplan, name: str) -> DataFrame:
     store = _writable_store(cat, name)
-    bs = _backslash_escapes_on(cat.spark)  # one conf read per statement
+    jasg = jplan.assignments()
     assignments: dict[str, str] = {}
-    for item in _split_top(set_text):
-        am = re.match(rf"^({_IDENT})\s*=\s*(.+)$", item, re.S)
-        if not am:
-            raise ValueError(f"cannot parse SET assignment {item!r}")
-        assignments[am.group(1)] = am.group(2).strip()
-    if where and has_where_subquery(where):
-        terms = [_parse_where_term(t) for t in _split_top(where, "AND")]
-        key_ins = [
-            i
-            for i, t in enumerate(terms)
-            if t[0] == "in" and not t[3] and t[1] == store.key
-        ]
-        others_plain = all(
-            t[0] == "plain" for i, t in enumerate(terms) if i not in key_ins[:1]
-        )
-        # A top-level OR in any AND-split part means the textual split is
-        # NOT a real conjunction (``sub AND a OR b`` is ``(sub AND a) OR
-        # b``) — extracting the IN term would change semantics. The inline
-        # route below handles that case with in-place substitution.
-        no_top_or = all(
-            len(_split_top(t, "OR")) == 1 for t in _split_top(where, "AND")
-        )
-        if key_ins and others_plain and no_top_or:
-            # Distributed route (round-11 ask #3, the UPDATE analog of the
-            # DELETE key-route above): a positive IN-subquery on the TABLE
-            # KEY becomes update(keys=frame) — matched rows found by a
-            # semi-join that never collects the key set to the driver, so
-            # there is NO inline-literal cap; remaining plain conjuncts
-            # ride along as the row filter, and the targeted rewrite keeps
-            # key-stats file skipping. Delta's UPDATE-with-subquery shape.
-            # Column-mapped tables take this route too (round-12 ask #4):
-            # the key column can never be renamed (_guard_col_mutation),
-            # and update()/read() speak logical names end-to-end — the
-            # read path translates predicates to physical internally.
-            idx = key_ins[0]
-            keys = cat.sql(terms[idx][2])
-            if len(keys.columns) != 1:
-                raise ValueError(
-                    "IN subquery must return exactly one column, got "
-                    f"{keys.columns}"
-                )
-            rest = [
-                t
-                for i, t in enumerate(_split_top(where, "AND"))
-                if i != idx
-            ]
-            rest_where = " AND ".join(rest) if rest else None
-            pred = extract_predicate(rest_where, bs) if rest_where else {}
-            n = store.update(
-                set=assignments,
-                where=rest_where,
-                predicate=pred or None,
-                keys=keys.toDF(store.key),
+    for i, flat in enumerate(plan["assignments"]):
+        tree = _tree(flat)
+        col = _column(tree["kids"][0])
+        if col is None:
+            raise ValueError(
+                f"UPDATE SET assignment {i + 1} must target a bare column "
+                f"name of {name}"
             )
-            _refresh_after(cat, name)
-            return _result(cat.spark, "UPDATE", name, n)
-        where, empty = _inline_where_subqueries(cat, where, bs=bs)
-        if empty:
+        assignments[col] = _text(q, jasg.apply(i).value(), tree["kids"][1])
+    where = pred = keys = None
+    if plan.get("condition"):
+        cond, jcond = _tree(plan["condition"]), jplan.condition().get()
+        routed = _route_where(cat, q, jcond, cond, store.key, False)
+        if routed is None:
             return _result(cat.spark, "UPDATE", name, 0)
-    pred = extract_predicate(where, bs) if where else {}
+        where, pred, keys = routed
     n = store.update(
-        set=assignments, where=where, predicate=pred or None
+        set=assignments, where=where, predicate=pred or None, keys=keys
     )
     _refresh_after(cat, name)
     return _result(cat.spark, "UPDATE", name, n)
 
 
-def _balanced_paren(text: str) -> int:
-    """Index just past the ')' balancing text[0] == '(' (quote-aware).
-    Raises ValueError on unbalanced input."""
-    depth = 0
-    i = 0
-    n = len(text)
-    while i < n:
-        c = text[i]
-        if c == "'":
-            i += 1
-            while i < n:
-                if text[i] == "'" and i + 1 < n and text[i + 1] == "'":
-                    i += 2
-                elif text[i] == "'":
-                    break
-                else:
-                    i += 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    raise ValueError("unbalanced parentheses in MERGE USING clause")
+def _qualified_columns(n: dict, path: tuple[int, ...] = ()):
+    """``(path, name parts)`` of every qualified column in an expression."""
+    if len(_name(n)) > 1:
+        yield path, _name(n)
+    for i, k in enumerate(n["kids"]):
+        yield from _qualified_columns(k, path + (i,))
 
 
-def _merge(cat, q: str) -> DataFrame:
-    shape_err = ValueError(
-        "unsupported MERGE shape; use MERGE INTO <name> [AS t] USING "
-        "(<subquery>)|<name> [AS s] ON t.<key> = s.<key> WHEN ..."
-    )
-    head = re.match(
-        rf"^MERGE\s+INTO\s+({_IDENT})(?:\s+AS)?"
-        rf"(?:\s+(?!USING\b)({_IDENT}))?\s+USING\s+",
-        q,
-        re.I | re.S,
-    )
-    if not head:
-        raise shape_err
-    name, talias = head.group(1), head.group(2)
-    rest = q[head.end():]
-    if rest.startswith("("):
-        # Balanced-paren scan: a subquery source routinely nests parens
-        # (VALUES lists, function calls) that a non-greedy regex would
-        # truncate at the first ')'.
-        j = _balanced_paren(rest)
-        src_text, rest = rest[:j], rest[j:]
-    else:
-        sm = re.match(rf"({_IDENT})", rest)
-        if not sm:
-            raise shape_err
-        src_text, rest = sm.group(1), rest[sm.end():]
-    m = re.match(
-        rf"^\s*(?:AS\s+)?(?:(?!ON\b)({_IDENT})\s+)?"
-        r"ON\s+(.+?)\s+(WHEN\s+.+)$",
-        rest,
-        re.I | re.S,
-    )
-    if not m:
-        raise shape_err
-    salias, on_text, clauses_text = m.groups()
-    talias = talias or name
+def _merge_condition(q: str, jcond, cond: dict, canon: dict) -> str:
+    """A WHEN condition's text with the statement's aliases rewritten to
+    the ``t.``/``s.`` prefixes store.merge evaluates, each edit made at
+    the column's own span (never inside a literal, and an alias that is
+    itself ``t`` or ``s`` cannot collide)."""
+    edits = []
+    for path, parts in _qualified_columns(cond):
+        if canon.get(parts[0], parts[0]) != parts[0]:
+            quoted = ["`" + p.replace("`", "``") + "`" for p in parts[1:]]
+            edits.append((*_span(_child(jcond, path)), ".".join([canon[parts[0]], *quoted])))
+    if not edits:
+        return _text(q, jcond, cond)
+    at, stop = _span(jcond, cond)
+    out = []
+    for start, end, text in sorted(edits):
+        out += [q[at:start], text]
+        at = end
+    return "".join(out) + q[at:stop]
+
+
+def _merge(cat, q: str, plan: dict, jplan, name: str) -> DataFrame:
     store = _writable_store(cat, name)
-    spark = cat.spark
-    if src_text.startswith("("):
+    key = store.key
+    tgt, src = plan["kids"]
+    talias = tgt["identifier"]["name"] if _cls(tgt) == "SubqueryAlias" else name
+    salias, jsrc = None, jplan.sourceTable()
+    if _cls(src) == "SubqueryAlias":
+        salias, src, jsrc = src["identifier"]["name"], src["kids"][0], jsrc.child()
+    if _cls(src) == "UnresolvedRelation":
+        parts = _parts(src["multipartIdentifier"])
+        if len(parts) != 1:
+            raise ValueError(
+                "unsupported MERGE source; use USING <registered name> or "
+                f"USING (<subquery>), got {'.'.join(parts)!r}"
+            )
+        salias = salias or parts[0]
+        source = cat.table(parts[0])
+    else:
         # cat.sql so the subquery source honors follow_head and inline
         # time travel, like every other read through the catalog.
-        source = cat.sql(src_text[1:-1])
         salias = salias or "s"
-    else:
-        salias = salias or src_text
-        source = cat.table(src_text)
-    key = store.key
-    on_ok = re.match(
-        rf"^\s*({_IDENT})\.({_IDENT})\s*=\s*({_IDENT})\.({_IDENT})\s*$",
-        on_text,
-    )
-    pairs = (
-        {(on_ok.group(1), on_ok.group(2)), (on_ok.group(3), on_ok.group(4))}
-        if on_ok
-        else set()
-    )
-    if not on_ok or pairs != {(talias, key), (salias, key)}:
+        source = cat.sql(_text(q, jsrc))
+    on = _tree(plan["mergeCondition"])
+    sides = {tuple(_name(k)) for k in on["kids"]}
+    if _cls(on) != "EqualTo" or sides != {(talias, key), (salias, key)}:
         raise ValueError(
             f"MERGE ON must be the key equi-join {talias}.{key} = "
-            f"{salias}.{key} (the store's MERGE contract); got {on_text!r}"
+            f"{salias}.{key} (the store's MERGE contract); got "
+            f"{_text(q, jplan.mergeCondition())!r}"
         )
-
-    def _rewrite_aliases(cond: str) -> str:
-        # store.merge evaluates conditions over t.<col> / s.<col>. Two
-        # phases through NUL-fenced placeholders: a user alias of literal
-        # 't' or 's' would otherwise collide with the canonical prefixes
-        # (USING src AS t → step 1's output 't.' must not be re-rewritten
-        # to 's.' by step 2).
-        cond = re.sub(rf"\b{re.escape(talias)}\.", "\x00T\x00.", cond)
-        cond = re.sub(rf"\b{re.escape(salias)}\.", "\x00S\x00.", cond)
-        return cond.replace("\x00T\x00.", "t.").replace("\x00S\x00.", "s.")
-
-    update_cols = None
-    update_cond = None
-    delete_cond = None
+    if plan["notMatchedBySourceActions"]:
+        raise ValueError(
+            "WHEN NOT MATCHED BY SOURCE is not supported by the store's "
+            "MERGE (unmatched target rows always survive); delete them "
+            "with a separate DELETE"
+        )
     insert = False
+    for flat in plan["notMatchedActions"]:
+        action = _tree(flat)
+        if action.get("condition"):
+            raise ValueError(
+                "WHEN NOT MATCHED AND <cond> is not supported by the "
+                "store's MERGE; filter the source instead"
+            )
+        if _cls(action) != "InsertStarAction":
+            raise ValueError("WHEN NOT MATCHED supports only INSERT *")
+        insert = True
+    canon = {talias: "t", salias: "s"}
+    update_cols = update_cond = delete_cond = None
     has_update = False
-    clause_re = re.compile(
-        r"WHEN\s+(NOT\s+)?MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+"
-        r"(DELETE|INSERT\s*\*|UPDATE\s+SET\s+.+?)"
-        r"(?=\s+WHEN\s+|\s*$)",
-        re.I | re.S,
-    )
-    matched_any = False
-    for cm in clause_re.finditer(clauses_text):
-        matched_any = True
-        not_matched, cond, action = cm.groups()
-        action_u = action.strip().upper()
-        if not_matched:
-            if cond is not None:
-                raise ValueError(
-                    "WHEN NOT MATCHED AND <cond> is not supported by the "
-                    "store's MERGE; filter the source instead"
-                )
-            if not action_u.startswith("INSERT"):
-                raise ValueError("WHEN NOT MATCHED supports only INSERT *")
-            insert = True
+    jactions = jplan.matchedActions()
+    for i, flat in enumerate(plan["matchedActions"]):
+        action = _tree(flat)
+        cond = None
+        if action.get("condition"):
+            jcond = jactions.apply(i).condition().get()
+            cond = _merge_condition(q, jcond, action["kids"][0], canon)
+        if _cls(action) == "DeleteAction":
+            delete_cond = cond or "true"
             continue
-        if action_u == "DELETE":
-            delete_cond = _rewrite_aliases(cond) if cond else "true"
-            continue
-        # UPDATE SET ...
         has_update = True
         if cond is not None:
-            update_cond = _rewrite_aliases(cond)
-        set_text = re.sub(r"^UPDATE\s+SET\s+", "", action.strip(), flags=re.I)
-        if set_text.strip() == "*":
+            update_cond = cond
+        if _cls(action) == "UpdateStarAction":
             update_cols = None
-        else:
-            update_cols = []
-            for item in _split_top(set_text):
-                am = re.match(
-                    rf"^(?:{re.escape(talias)}\.)?({_IDENT})\s*=\s*"
-                    rf"{re.escape(salias)}\.({_IDENT})\s*$",
-                    item,
-                    re.S,
+            continue
+        update_cols = []
+        for j in action["assignments"]:
+            kp, vp = (_name(x) for x in action["kids"][j]["kids"])
+            col = kp[-1] if kp else None
+            if kp not in ([col], [talias, col]) or vp != [salias, col]:
+                raise ValueError(
+                    f"MERGE UPDATE SET supports 'c = {salias}.c' assignments "
+                    f"(or SET *); got {'.'.join(kp) or '<expr>'} = "
+                    f"{'.'.join(vp) or '<expr>'}"
                 )
-                if not am or am.group(1) != am.group(2):
-                    raise ValueError(
-                        f"MERGE UPDATE SET supports 'c = {salias}.c' "
-                        f"assignments (or SET *); got {item!r}"
-                    )
-                update_cols.append(am.group(1))
-    if not matched_any:
-        raise ValueError("MERGE has no parseable WHEN clause")
-    if not has_update and not delete_cond and not insert:
-        raise ValueError("MERGE needs at least one action clause")
+            update_cols.append(col)
     if not has_update:
         # No UPDATE clause anywhere (insert-only, or conditional DELETE
         # only): suppress updates entirely. store.merge's update_cond=None
@@ -1018,15 +764,18 @@ def _merge(cat, q: str) -> DataFrame:
         # would rewrite matched-but-not-deleted rows the statement never
         # asked to touch.
         update_cond = "false"
-    store.merge(
-        source,
-        update_cols=update_cols,
-        update_cond=update_cond,
-        delete_cond=delete_cond,
-        insert=insert,
-    )
+    store.merge(source, update_cols=update_cols, update_cond=update_cond,
+                delete_cond=delete_cond, insert=insert)
     _refresh_after(cat, name)
-    return _result(spark, "MERGE", name, -1)
+    return _result(cat.spark, "MERGE", name, -1)
+
+
+_ROUTES = {
+    "InsertIntoStatement": _insert,
+    "DeleteFromTable": _delete,
+    "UpdateTable": _update,
+    "MergeIntoTable": _merge,
+}
 
 
 # -- utility statements (Delta's SQL maintenance surface) ---------------------

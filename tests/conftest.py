@@ -64,20 +64,30 @@ _SLOW_NODEIDS = {
 
 
 def pytest_collection_modifyitems(config, items):
+    # nodeid is like "tests/test_x.py::test_y[param]" — compare on the
+    # basename::name form so the gate works from any rootdir.
+    present = {item.nodeid.split("/")[-1] for item in items}
+    files = {nid.split("::")[0] for nid in present}
+    # A renamed/deleted slow test must not silently un-gate: an entry whose
+    # file was collected but which names no test is reported at the end of
+    # the run (pytest_terminal_summary), in full and default runs alike.
+    config._slow_gate_stale = sorted(
+        n for n in _SLOW_NODEIDS - present if n.split("::")[0] in files
+    )
     if os.environ.get("PYTEST_FULL") == "1":
         return
     skip = pytest.mark.skip(reason="slow; set PYTEST_FULL=1 to run")
-    matched = set()
     for item in items:
-        # nodeid is like "tests/test_x.py::test_y[param]" — compare on the
-        # basename::name form so the gate works from any rootdir.
-        nid = item.nodeid.split("/")[-1]
-        if nid in _SLOW_NODEIDS:
+        if item.nodeid.split("/")[-1] in _SLOW_NODEIDS:
             item.add_marker(skip)
-            matched.add(nid)
-    # A renamed/deleted slow test must not silently un-gate: leave the
-    # stale entry detectable (full runs and `-q` output both show counts).
-    config._slow_gate_unmatched = _SLOW_NODEIDS - matched
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    stale = getattr(config, "_slow_gate_stale", [])
+    if stale:
+        terminalreporter.section("stale slow-gate entries (tests/conftest.py)")
+        for nid in stale:
+            terminalreporter.write_line(f"{nid}: matches no collected test")
 
 
 @pytest.fixture(scope="session")

@@ -351,34 +351,26 @@ def test_pre_scalar_table_append_does_not_poison_schema(spark, tmp_path):
     assert len(rows) == 11
 
 
-def test_unescape_strict_hex_and_surrogates(spark, tmp_path):
-    """Pass-3 review pins: the unicode decoder requires 4 STRICT hex
-    digits (int() alone also accepts ' 041'/'+123'/'1_23' forms Spark
-    leaves undecoded), combines surrogate pairs into one astral code
-    point, and DECLINES extraction for lone surrogate halves (conjunct
-    falls back to row-exact WHERE, never wrong pruning)."""
-    from lakehouse_spark.sqldml import (
-        _literal,
-        _UndecodableEscape,
-        _unescape_backslashes as u,
-    )
+def test_escaped_literals_delete_exactly_sparks_rows(spark, tmp_path):
+    """A WHERE's string escapes (an astral surrogate pair, a lone
+    surrogate half, a malformed \\u) select exactly the rows Spark's own
+    filter selects, with stats pruning on; a literal whose value cannot
+    round-trip into the stats predicate (binary) is not extracted."""
+    from lakehouse_spark.sqldml import extract_predicate
 
     bs = chr(92)
-    assert u(bs + "u 041") == "u 041"  # not decoded (matches Spark)
-    assert u(bs + "uD83D" + bs + "uDE00") == chr(0x1F600)
-    with pytest.raises(_UndecodableEscape):
-        u(bs + "uD83Dx")
-    ok, _v = _literal("'" + bs + "uDE00'")
-    assert ok is False
-    # End-to-end: astral pair in a WHERE deletes the right row.
-    st = TableStore(spark, str(tmp_path / "t"), key="k", stats_cols=("c",))
-    st.init(
-        spark.createDataFrame(
-            [("r1", chr(0x1F600)), ("r2", "plain")], "k string, c string"
-        )
-    )
-    cat = LakeCatalog(spark)
-    cat.register("bsur", store=st)
-    out = cat.sql(f"DELETE FROM bsur WHERE c = '{bs}uD83D{bs}uDE00'")
-    assert out.collect()[0].affected_rows == 1
-    assert {r.k for r in st.read().collect()} == {"r2"}
+    rows = [("r1", chr(0x1F600)), ("r2", "plain"), ("r3", "?"),
+            ("r4", "u 041"), ("r5", "A")]
+    wheres = [f"c = '{bs}uD83D{bs}uDE00'", f"c = '{bs}uDE00'",
+              f"c = '{bs}u 041'", f"c = '{bs}u0041'"]
+    for i, where in enumerate(wheres):
+        st = TableStore(spark, str(tmp_path / f"t{i}"), key="k", stats_cols=("c",))
+        st.init(spark.createDataFrame(rows, "k string, c string"))
+        want = {r.k for r in st.read().filter(where).collect()}
+        assert want, where
+        cat = LakeCatalog(spark)
+        cat.register("besc", store=st)
+        out = cat.sql(f"DELETE FROM besc WHERE {where}")
+        assert out.collect()[0].affected_rows == len(want)
+        assert {r.k for r in st.read().collect()} == {r[0] for r in rows} - want
+    assert extract_predicate("b = X'0A' AND k = 'r1'") == {"k": "r1"}

@@ -109,3 +109,36 @@ def test_sketch_aggregates_track_exact_within_bounds(spark):
         assert a.exact_supps == e.supps, flag
         assert a.parts_in_bound and a.supps_in_bound, flag
         assert a.p50_in_band, flag
+
+
+def test_rounded_mean_tie_matches_oracle(spark, tmp_path):
+    """A group whose exact mean sits on a rounding tie (4721.59625) must
+    round the same way in the builder and the DuckDB oracle: HALF-UP to
+    4721.5963. Rounding the double mean let the engines break the tie
+    differently (Spark .5963, DuckDB .5962)."""
+    import shutil
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    for t in ("nation", "region"):
+        shutil.copy(f"{SF_SMALL}/{t}.parquet", tmp_path / f"{t}.parquet")
+    cust = pq.read_table(f"{SF_SMALL}/customer.parquet")
+    cust = cust.filter(pc.not_equal(cust["c_nationkey"], 4))
+    tie = cust.slice(0, 2).to_pylist()
+    for row, bal in zip(tie, (4721.5962, 4721.5963)):
+        row.update(c_custkey=row["c_custkey"] + 10**6, c_nationkey=4, c_acctbal=bal)
+    cust = pa.concat_tables([cust, pa.Table.from_pylist(tie, cust.schema)])
+    pq.write_table(cust, tmp_path / "customer.parquet")
+    con = duckdb.connect()
+    for t in ("customer", "nation", "region"):
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{tmp_path}/{t}.parquet'")
+    spec = CATALOG["j5_fk_lookup_chain"]
+    df = spec.build(spark, str(tmp_path))
+    got = {r.n_name: r.avg_bal for r in df.collect()}
+    nation4 = con.sql("SELECT n_name FROM nation WHERE n_nationkey = 4").fetchone()[0]
+    assert got[nation4] == 4721.5963
+    res = oracle.compare("j5_fk_lookup_chain", df, con, spec.oracle)
+    assert res.spark_rows == res.oracle_rows and res.hash_match

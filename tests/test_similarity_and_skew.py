@@ -778,6 +778,18 @@ def test_spread_noop_on_exchange_plans_and_streaming(spark):
     assert skew.spread(stream, "value") is stream
 
 
+def test_spread_logs_exchange_noop_once(spark, caplog, monkeypatch):
+    """The exchange no-op is a silent fallback: it logs one debug line per
+    process, not one per call."""
+    monkeypatch.setattr(skew, "_exchange_noop_logged", False)
+    aggregated = spark.range(100).selectExpr("id % 3 AS k").groupBy("k").count()
+    with caplog.at_level("DEBUG", logger=skew.__name__):
+        assert skew.spread(aggregated, "k") is aggregated
+        assert skew.spread(aggregated, "k") is aggregated
+    noops = [r for r in caplog.records if "already has an exchange" in r.getMessage()]
+    assert len(noops) == 1
+
+
 def test_band_signatures_spread_input_false_same_rows_no_fanout(spark):
     """Micro-batch append paths (DedupIndex.admit, dedup_ingest_sink) opt
     out of the compute spread: the banding pipeline is fully narrow, so a

@@ -31,7 +31,7 @@ def _mk(spark, tmp_path, name="t", write_cdf=False):
     return st
 
 
-def test_extract_predicate_shapes():
+def test_extract_predicate_shapes(spark):
     p = extract_predicate(
         "id >= 10 AND id < 20 AND day = 'd1' AND grp IN (1, 2, 3) "
         "AND ts BETWEEN 5 AND 9 AND upper(name) = 'X'"
@@ -391,7 +391,7 @@ def test_sql_ctas_and_alter_table(spark, tmp_path):
 # -- round-9 review fixes (each pinned a silent-wrong-results hazard) --------
 
 
-def test_extract_predicate_toplevel_or_disables_pruning():
+def test_extract_predicate_toplevel_or_disables_pruning(spark):
     """SQL precedence: A AND B OR C is (A AND B) OR C — extracting A as a
     standalone conjunct would prune files that only match C. A top-level
     OR must disable extraction entirely."""
@@ -414,7 +414,7 @@ def test_sql_delete_with_toplevel_or_deletes_all_branches(spark, tmp_path):
     assert cat.sql("SELECT count(*) AS n FROM t WHERE day IN ('1','2')").first().n == 0
 
 
-def test_extract_predicate_keeps_int64_exact():
+def test_extract_predicate_keeps_int64_exact(spark):
     big = 9007199254740993  # 2^53 + 1: float round-trips to ...992
     p = extract_predicate(f"id = {big}")
     assert p["id"] == big and isinstance(p["id"], int)
@@ -549,7 +549,7 @@ def test_sql_insert_overwrite_full_replace(spark, tmp_path):
     assert cat.sql("SELECT count(*) AS n FROM t").first().n == 8
 
 
-def test_extract_predicate_between_then_or_disables_pruning():
+def test_extract_predicate_between_then_or_disables_pruning(spark):
     """BETWEEN's AND-swallowing must not consume a following OR: the
     top-level-OR guard has to see 'x BETWEEN a AND b OR c' as two parts."""
     assert (
@@ -638,3 +638,71 @@ def test_sql_passthrough_insert_reads_follow_head(spark, tmp_path):
         assert spark.table("native_sink").count() == 220
     finally:
         spark.sql("DROP TABLE IF EXISTS native_sink")
+
+
+# -- statements the parser reads as Spark does ---------------------------------
+
+
+def test_sql_trailing_line_comment_is_not_a_conjunct(spark, tmp_path):
+    """Text after ``--`` is a comment: it must neither narrow the rows
+    nor the file-skipping predicate."""
+    st = _mk(spark, tmp_path)
+    cat = LakeCatalog(spark)
+    cat.register("t", store=st, follow_head=True)
+    r = cat.sql(
+        "UPDATE t SET val = -1 WHERE id = 1 -- AND day = '2'"
+    ).first()
+    assert r.affected_rows == 1
+    assert {x.id for x in st.read().filter("val = -1").collect()} == {1}
+    r = cat.sql("DELETE FROM t WHERE id = 5 -- AND day = '2'").first()
+    assert r.affected_rows == 1
+    assert st.read().filter("id = 5").count() == 0
+
+
+def test_sql_block_comments_in_delete_merge_insert(spark, tmp_path):
+    st = _mk(spark, tmp_path)
+    cat = LakeCatalog(spark)
+    cat.register("t", store=st, follow_head=True)
+    r = cat.sql(
+        "/* audit */ DELETE /* one */ FROM t WHERE /* row */ id = 3"
+    ).first()
+    assert r.affected_rows == 1
+    cat.sql(
+        "MERGE /* upsert */ INTO t USING (SELECT CAST(7 AS BIGINT) AS id, "
+        "'m' AS day, CAST(70 AS BIGINT) AS val) /* src */ s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET /* all */ *"
+    )
+    r = cat.sql("INSERT /* load */ INTO t VALUES (900, 'i', 9)").first()
+    assert r.affected_rows == 1
+    rows = {x.id: (x.day, x.val) for x in st.read().collect()}
+    assert 3 not in rows and rows[7] == ("m", 70) and rows[900] == ("i", 9)
+    assert len(rows) == 100
+
+
+def test_sql_update_set_backticks_and_where_inside_literal(spark, tmp_path):
+    st = _mk(spark, tmp_path)
+    cat = LakeCatalog(spark)
+    cat.register("t", store=st, follow_head=True)
+    assert cat.sql("UPDATE t SET `val` = 5 WHERE id = 2").first().affected_rows == 1
+    r = cat.sql("UPDATE t SET day = 'x WHERE y' WHERE id = 3").first()
+    assert r.affected_rows == 1
+    rows = {x.id: (x.day, x.val) for x in st.read().collect()}
+    assert rows[2] == ("2", 5) and rows[3] == ("x WHERE y", 6)
+    assert rows[4] == ("0", 8)
+
+
+def test_sql_boolean_literals_route(spark, tmp_path):
+    st = TableStore(spark, str(tmp_path / "b"), key="id")
+    st.init(spark.range(4).selectExpr("id", "id % 2 = 0 AS flag"))
+    cat = LakeCatalog(spark)
+    cat.register("b", store=st, follow_head=True)
+    spark.sql("SELECT true, false").collect()  # parse TRUE/FALSE elsewhere first
+    r = cat.sql("UPDATE b SET flag = false WHERE flag = true AND id < 2").first()
+    assert r.affected_rows == 1
+    cat.sql(
+        "MERGE INTO b USING (SELECT CAST(3 AS BIGINT) AS id, true AS flag) s "
+        "ON b.id = s.id WHEN MATCHED AND true THEN UPDATE SET *"
+    )
+    assert {x.id: x.flag for x in st.read().collect()} == {
+        0: False, 1: False, 2: True, 3: True
+    }

@@ -62,6 +62,29 @@ def test_multi_version_range_and_default_head(store):
     assert state == {r.id: r.v for r in store.read().collect()}
 
 
+def test_versions_read_back_exactly_and_history_newest_first(spark, store):
+    """The versioned-table contract the pipelines rely on: init round-trips
+    rows and types, append is additive, upsert updates matched keys and
+    inserts the rest without duplicating, delete_keys removes exactly the
+    named keys present, every commit bumps the version
+    by one and stays readable by number, and history() lists versions
+    newest first."""
+
+    def rows(v=None):
+        return sorted((r.id, r.v) for r in store.read(v).collect())
+
+    assert dict(store.read(0).dtypes) == {"id": "bigint", "v": "string"}
+    assert rows(0) == [(1, "a"), (2, "b")]
+    assert rows(1) == [(1, "a"), (2, "b"), (3, "c")]
+    assert rows(2) == [(1, "a"), (2, "B"), (3, "c"), (4, "d")]
+    assert rows(3) == [(2, "B"), (3, "c"), (4, "d")]
+    store.upsert(spark.createDataFrame([(4, "D")], "id long, v string"))
+    store.delete_keys(spark.createDataFrame([(3,), (999,)], "id long"))
+    assert store.current_version() == 5
+    assert rows() == [(2, "B"), (4, "D")]
+    assert [h["version"] for h in store.history()] == [5, 4, 3, 2, 1, 0]
+
+
 def test_compaction_emits_no_changes(store):
     v = store.compact()
     feed = store.changes(v, v)
