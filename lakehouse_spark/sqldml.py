@@ -100,14 +100,24 @@ def _parts(v) -> list[str]:
     return v[1:-1].split(", ") if isinstance(v, str) else list(v)
 
 
-def _name(n: dict) -> list[str]:
-    """A column reference's name parts; [] for any other expression."""
-    return _parts(n["nameParts"]) if _cls(n) == "UnresolvedAttribute" else []
+def _name(n: dict, j=None) -> list[str]:
+    """A column reference's name parts; [] for any other expression.
+    toJSON joins the parts with ", ", so a quoted part that holds ", "
+    (`a, b`) reads as two; given ``j``, the node's py4j handle, a
+    multi-part name is read exactly (callers pass it when the statement
+    has a backtick, the only way to quote such a part)."""
+    if _cls(n) != "UnresolvedAttribute":
+        return []
+    parts = _parts(n["nameParts"])
+    if j is not None and len(parts) > 1:
+        jparts = j.nameParts()
+        parts = [jparts.apply(i) for i in range(jparts.size())]
+    return parts
 
 
-def _column(n: dict) -> str | None:
+def _column(n: dict, j=None) -> str | None:
     """The column an unqualified attribute names, else None."""
-    parts = _name(n)
+    parts = _name(n, j)
     return parts[0] if len(parts) == 1 else None
 
 
@@ -148,6 +158,22 @@ def _text(q: str, jnode, node: dict | None = None) -> str:
     return q[start:stop]
 
 
+def _query_text(q: str, jplan, plan: dict) -> str:
+    """A query's text. The top node's origin can cover only its trailing
+    clauses (the Sort/Limit nodes of ORDER BY and LIMIT carry just those),
+    so the text starts at the earliest origin down the first-child chain.
+    In a FROM-first query that is the relation after the FROM keyword,
+    which no node's origin covers."""
+    start, stop = _span(jplan)
+    while plan["kids"]:
+        plan, jplan = plan["kids"][0], jplan.children().apply(0)
+        first = _span(jplan)[0]
+        if first >= 0:  # -1: a node built without an origin
+            start = min(start, first)
+    from_first = re.search(r"\bFROM\s+\Z", q[:start], re.I)
+    return q[from_first.start() if from_first else start : stop]
+
+
 def _child(jnode, path: tuple[int, ...]):
     for i in path:
         jnode = jnode.children().apply(i)
@@ -156,12 +182,13 @@ def _child(jnode, path: tuple[int, ...]):
 
 def _render(q: str, jnode, node: dict, subst: dict, path: tuple = ()) -> str:
     """A condition's text with the subtree at each path in ``subst``
-    replaced by the given SQL. Only the AND/OR nodes above a replacement
-    are rebuilt (operands parenthesized); every other subtree is sliced
-    from the statement, so a replaced term's own text is never needed."""
+    replaced by the given SQL. AND/OR nodes are rebuilt from their
+    operands (parenthesized) and only the other terms are sliced from the
+    statement: the parser builds a chain ``a AND b AND c`` as a balanced
+    tree whose inner nodes all carry the whole chain's origin."""
     if path in subst:
         return subst[path]
-    if not any(p[: len(path)] == path for p in subst):
+    if _cls(node) not in ("And", "Or"):
         return _text(q, jnode, node)
     op = f" {_cls(node).upper()} "
     return op.join(
@@ -300,8 +327,10 @@ def _subquery_terms(n: dict, path: tuple[int, ...] = ()) -> list:
 
 
 def _result(spark, op: str, table: str, affected: int) -> DataFrame:
-    schema = "op string, table string, affected_rows long"
-    return spark.createDataFrame([(op, table, affected)], schema)
+    return spark.createDataFrame(
+        [(op, table, affected)],
+        "op string, table string, affected_rows long",
+    )
 
 
 def _writable_store(cat, name: str):
@@ -361,7 +390,8 @@ def _insert(cat, q: str, plan: dict, jplan, name: str) -> DataFrame:
         )
     store = _writable_store(cat, name)
     spark = cat.spark
-    body, text = plan["kids"][0], _text(q, jplan.query())
+    body = plan["kids"][0]
+    text = _query_text(q, jplan.query(), body)
     if _cls(body) in ("LocalRelation", "UnresolvedInlineTable"):
         src = spark.sql(f"SELECT * FROM {text}")
     else:
@@ -396,7 +426,10 @@ def _insert(cat, q: str, plan: dict, jplan, name: str) -> DataFrame:
     # genuinely incompatible types still fail the append's enforcement).
     ttypes = {f.name: f.dataType for f in tschema}
     src = src.select(
-        *[F.col(c).cast(ttypes[c]).alias(c) if c in ttypes else c for c in src.columns]
+        *[
+            F.col(c).cast(ttypes[c]).alias(c) if c in ttypes else F.col(c)
+            for c in src.columns
+        ]
     )
     overwrite = plan["overwrite"]
     if overwrite:
@@ -407,8 +440,12 @@ def _insert(cat, q: str, plan: dict, jplan, name: str) -> DataFrame:
         # — a narrow segment null-fills at read time by schema union.
         missing = [c for c in tschema.names if c not in src.columns]
         if missing:
-            nulls = [F.lit(None).cast(ttypes[c]).alias(c) for c in missing]
-            src = src.select("*", *nulls).select(*tschema.names)
+            src = src.select(
+                "*",
+                *[
+                    F.lit(None).cast(ttypes[c]).alias(c) for c in missing
+                ],
+            ).select(*tschema.names)
     src = src.persist()
     try:
         n = src.count()
@@ -486,28 +523,16 @@ def _sql_literal(v, backslash_escapes: bool = True) -> str:
     return f"'{s}'"
 
 
-def _in_subquery(cat, q: str, jsub) -> DataFrame:
+def _in_subquery(cat, q: str, jsub, sub: dict) -> DataFrame:
     """An IN-subquery's body through the catalog (follow_head and inline
     time travel apply); it must return one column."""
-    sub = cat.sql(_text(q, jsub.query().plan()))
-    if len(sub.columns) != 1:
+    body = _tree(sub["kids"][-1]["plan"])
+    df = cat.sql(_query_text(q, jsub.query().plan(), body))
+    if len(df.columns) != 1:
         raise ValueError(
-            f"IN subquery must return exactly one column, got {sub.columns}"
+            f"IN subquery must return exactly one column, got {df.columns}"
         )
-    return sub
-
-
-def _subquery_values(sub: DataFrame) -> list:
-    """An uncorrelated subquery's distinct values, bounded."""
-    rows = sub.distinct().limit(_SUBQ_INLINE_CAP + 1).collect()
-    if len(rows) > _SUBQ_INLINE_CAP:
-        raise ValueError(
-            f"IN-subquery value set exceeds {_SUBQ_INLINE_CAP} distinct "
-            "values; at that scale route the frame through the Python API "
-            "(TableStore.delete_keys joins it distributed) — DELETE with "
-            "the subquery column as the table key does this automatically"
-        )
-    return [r[0] for r in rows]
+    return df
 
 
 def _eval_exists(cat, subsql: str) -> bool:
@@ -564,12 +589,21 @@ def _inline_subqueries(cat, q: str, jcond, cond: dict, terms: list, top: set):
         jsub = _child(jcond, path)
         jsub = jsub.child() if neg else jsub
         if _cls(sub) == "Exists":
-            truth = _eval_exists(cat, _text(q, jsub.plan())) != neg
-            subst[path] = "TRUE" if truth else "FALSE"
+            body = _query_text(q, jsub.plan(), _tree(sub["plan"]))
+            subst[path] = "TRUE" if _eval_exists(cat, body) != neg else "FALSE"
         else:
             col = _text(q, jsub.children().apply(0), sub["kids"][0])
-            vals = _subquery_values(_in_subquery(cat, q, jsub))
-            subst[path] = _in_literal(col, vals, neg, bs)
+            df = _in_subquery(cat, q, jsub, sub).distinct()
+            rows = df.limit(_SUBQ_INLINE_CAP + 1).collect()
+            if len(rows) > _SUBQ_INLINE_CAP:
+                raise ValueError(
+                    f"IN-subquery value set exceeds {_SUBQ_INLINE_CAP} distinct "
+                    "values; at that scale route the frame through the Python "
+                    "API (TableStore.delete_keys joins it distributed) — DELETE "
+                    "with the subquery column as the table key does this "
+                    "automatically"
+                )
+            subst[path] = _in_literal(col, [r[0] for r in rows], neg, bs)
         if subst[path] == "FALSE" and path in top:
             return None
     return _render(q, jcond, cond, subst)
@@ -594,7 +628,7 @@ def _route_where(cat, q: str, jcond, cond: dict, key: str, whole: bool):
         and _cls(term) == "InSubquery"
         and _column(sub["kids"][0]) == key
     ):
-        keys = _in_subquery(cat, q, _child(jcond, path)).toDF(key)
+        keys = _in_subquery(cat, q, _child(jcond, path), sub).toDF(key)
         rest = [n for p, n in conjs if p != path]
         if not rest:
             return None, None, keys
@@ -631,7 +665,7 @@ def _update(cat, q: str, plan: dict, jplan, name: str) -> DataFrame:
     assignments: dict[str, str] = {}
     for i, flat in enumerate(plan["assignments"]):
         tree = _tree(flat)
-        col = _column(tree["kids"][0])
+        col = _column(tree["kids"][0], jasg.apply(i).key() if "`" in q else None)
         if col is None:
             raise ValueError(
                 f"UPDATE SET assignment {i + 1} must target a bare column "
@@ -653,9 +687,9 @@ def _update(cat, q: str, plan: dict, jplan, name: str) -> DataFrame:
 
 
 def _qualified_columns(n: dict, path: tuple[int, ...] = ()):
-    """``(path, name parts)`` of every qualified column in an expression."""
+    """``(path, node)`` of every qualified column in an expression."""
     if len(_name(n)) > 1:
-        yield path, _name(n)
+        yield path, n
     for i, k in enumerate(n["kids"]):
         yield from _qualified_columns(k, path + (i,))
 
@@ -666,10 +700,13 @@ def _merge_condition(q: str, jcond, cond: dict, canon: dict) -> str:
     the column's own span (never inside a literal, and an alias that is
     itself ``t`` or ``s`` cannot collide)."""
     edits = []
-    for path, parts in _qualified_columns(cond):
+    for path, n in _qualified_columns(cond):
+        jcol = _child(jcond, path) if "`" in q else None
+        parts = _name(n, jcol)
         if canon.get(parts[0], parts[0]) != parts[0]:
             quoted = ["`" + p.replace("`", "``") + "`" for p in parts[1:]]
-            edits.append((*_span(_child(jcond, path)), ".".join([canon[parts[0]], *quoted])))
+            jcol = _child(jcond, path) if jcol is None else jcol
+            edits.append((*_span(jcol), ".".join([canon[parts[0]], *quoted])))
     if not edits:
         return _text(q, jcond, cond)
     at, stop = _span(jcond, cond)
@@ -683,6 +720,7 @@ def _merge_condition(q: str, jcond, cond: dict, canon: dict) -> str:
 def _merge(cat, q: str, plan: dict, jplan, name: str) -> DataFrame:
     store = _writable_store(cat, name)
     key = store.key
+    exact = "`" in q  # read multi-part names exactly (see _name)
     tgt, src = plan["kids"]
     talias = tgt["identifier"]["name"] if _cls(tgt) == "SubqueryAlias" else name
     salias, jsrc = None, jplan.sourceTable()
@@ -701,14 +739,17 @@ def _merge(cat, q: str, plan: dict, jplan, name: str) -> DataFrame:
         # cat.sql so the subquery source honors follow_head and inline
         # time travel, like every other read through the catalog.
         salias = salias or "s"
-        source = cat.sql(_text(q, jsrc))
-    on = _tree(plan["mergeCondition"])
-    sides = {tuple(_name(k)) for k in on["kids"]}
+        source = cat.sql(_query_text(q, jsrc, src))
+    on, jon = _tree(plan["mergeCondition"]), jplan.mergeCondition()
+    sides = {
+        tuple(_name(k, jon.children().apply(i) if exact else None))
+        for i, k in enumerate(on["kids"])
+    }
     if _cls(on) != "EqualTo" or sides != {(talias, key), (salias, key)}:
         raise ValueError(
             f"MERGE ON must be the key equi-join {talias}.{key} = "
             f"{salias}.{key} (the store's MERGE contract); got "
-            f"{_text(q, jplan.mergeCondition())!r}"
+            f"{_text(q, jon)!r}"
         )
     if plan["notMatchedBySourceActions"]:
         raise ValueError(
@@ -748,7 +789,11 @@ def _merge(cat, q: str, plan: dict, jplan, name: str) -> DataFrame:
             continue
         update_cols = []
         for j in action["assignments"]:
-            kp, vp = (_name(x) for x in action["kids"][j]["kids"])
+            jasg = jactions.apply(i).children().apply(j) if exact else None
+            kp, vp = (
+                _name(x, jasg.children().apply(k) if exact else None)
+                for k, x in enumerate(action["kids"][j]["kids"])
+            )
             col = kp[-1] if kp else None
             if kp not in ([col], [talias, col]) or vp != [salias, col]:
                 raise ValueError(
@@ -764,8 +809,13 @@ def _merge(cat, q: str, plan: dict, jplan, name: str) -> DataFrame:
         # would rewrite matched-but-not-deleted rows the statement never
         # asked to touch.
         update_cond = "false"
-    store.merge(source, update_cols=update_cols, update_cond=update_cond,
-                delete_cond=delete_cond, insert=insert)
+    store.merge(
+        source,
+        update_cols=update_cols,
+        update_cond=update_cond,
+        delete_cond=delete_cond,
+        insert=insert,
+    )
     _refresh_after(cat, name)
     return _result(cat.spark, "MERGE", name, -1)
 
@@ -829,9 +879,7 @@ def is_util(query: str) -> bool:
 
 
 def _json_str(v) -> str:
-    import json as _json
-
-    return _json.dumps(v, sort_keys=True, default=str)
+    return json.dumps(v, sort_keys=True, default=str)
 
 
 def route_util(cat, query: str) -> DataFrame:

@@ -706,3 +706,47 @@ def test_sql_boolean_literals_route(spark, tmp_path):
     assert {x.id: x.flag for x in st.read().collect()} == {
         0: False, 1: False, 2: True, 3: True
     }
+
+
+def test_sql_insert_and_merge_bodies_with_order_by_limit(spark, tmp_path):
+    """The Sort/Limit nodes on top of a query carry only the ORDER BY /
+    LIMIT text, and a FROM-first query's Project starts at SELECT; the
+    INSERT and MERGE bodies are still the whole query."""
+    st = _mk(spark, tmp_path)
+    cat = LakeCatalog(spark)
+    cat.register("t", store=st, follow_head=True)
+    r = cat.sql(
+        "INSERT INTO t SELECT id + 1000, day, val FROM t WHERE id < 50 "
+        "ORDER BY id DESC LIMIT 3"
+    ).first()
+    assert r.affected_rows == 3
+    r = cat.sql("INSERT INTO t FROM t SELECT id + 2000, day, val WHERE id < 2").first()
+    assert r.affected_rows == 2
+    cat.sql(
+        "MERGE INTO t USING (SELECT id, 'm' AS day, -val AS val FROM t "
+        "WHERE id < 10 ORDER BY id LIMIT 2) s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET *"
+    )
+    rows = {x.id: (x.day, x.val) for x in st.read().collect()}
+    assert {i for i in rows if i >= 1000} == {1047, 1048, 1049, 2000, 2001}
+    assert rows[0] == ("m", 0) and rows[1] == ("m", -2) and rows[2] == ("2", 4)
+
+
+def test_sql_quoted_column_with_comma(spark, tmp_path):
+    """A quoted name part may hold ", " (how toJSON joins name parts):
+    it stays one column in UPDATE SET, MERGE SET and a MERGE condition."""
+    st = TableStore(spark, str(tmp_path / "c"), key="id")
+    st.init(spark.range(4).selectExpr("id", "id * 10 AS `a, b`"))
+    cat = LakeCatalog(spark)
+    cat.register("c", store=st, follow_head=True)
+    assert cat.sql("UPDATE c SET `a, b` = -1 WHERE id = 1").first().affected_rows == 1
+    src = "(SELECT id, id * 100 AS `a, b` FROM range(4))"
+    cat.sql(
+        f"MERGE INTO c AS tgt USING {src} AS src ON tgt.id = src.id "
+        "WHEN MATCHED AND src.`a, b` > 100 THEN UPDATE SET `a, b` = src.`a, b`"
+    )
+    cat.sql(
+        f"MERGE INTO c AS tgt USING {src} AS src ON tgt.id = src.id "
+        "WHEN MATCHED AND tgt.`a, b` < 0 THEN DELETE"
+    )
+    assert {x.id: x["a, b"] for x in st.read().collect()} == {0: 0, 2: 200, 3: 300}

@@ -327,3 +327,81 @@ def test_exists_failure_not_misattributed_to_correlation(spark, tmp_path):
     msg = str(ei.value)
     assert "failed to evaluate" in msg
     assert "correlated" not in msg  # a typo'd table is not correlation
+
+
+# -- chains of three or more terms ---------------------------------------------
+# The parser builds ``a AND b AND c`` as one balanced tree whose inner AND
+# nodes all carry the whole chain's text. The subquery below reads a
+# version the raw Spark view cannot, so any path that hands the original
+# subquery text to the store fails instead of passing by luck.
+
+
+def _versioned_quarantine(spark, path):
+    q = _quarantine(spark, path, [3, 4, 5, 150, 151])  # v0
+    q.append(spark.createDataFrame([(7,), (9,)], "id long"))  # v1
+    return q
+
+
+def test_update_key_in_subquery_last_in_three_term_chain(spark, tmp_path):
+    st = _mk(spark, tmp_path / "t", n_segs=2)
+    cat = LakeCatalog(spark)
+    cat.register("t", store=st)
+    cat.register("quarantine", store=_versioned_quarantine(spark, tmp_path / "q"))
+    res = cat.sql(
+        "UPDATE t SET x = -1 WHERE flag = 1 AND x < 100 AND "
+        "id IN (SELECT id FROM quarantine VERSION AS OF 0)"
+    ).collect()[0]
+    assert res.affected_rows == 2
+    assert {r.id for r in st.read().filter("x = -1").collect()} == {3, 5}
+
+
+def test_update_non_key_in_subquery_in_three_term_chain(spark, tmp_path):
+    st = _mk(spark, tmp_path / "t", n_segs=2)
+    cat = LakeCatalog(spark)
+    cat.register("t", store=st)
+    cat.register("quarantine", store=_versioned_quarantine(spark, tmp_path / "q"))
+    res = cat.sql(
+        "UPDATE t SET flag = 7 WHERE flag = 1 AND x < 100 AND "
+        "x IN (SELECT id FROM quarantine VERSION AS OF 0) AND id >= 0"
+    ).collect()[0]
+    assert res.affected_rows == 2
+    assert {r.id for r in st.read().filter("flag = 7").collect()} == {3, 5}
+
+
+def test_delete_time_travel_subquery_last_in_chain(spark, tmp_path):
+    st = _mk(spark, tmp_path / "t", n_segs=1)  # v0: ids 0..99
+    st.append(
+        spark.range(100, 105).selectExpr("id", "id AS x", "id % 2 AS flag")
+    )
+    cat = LakeCatalog(spark)
+    cat.register("t", store=st, follow_head=True)
+    res = cat.sql(
+        "DELETE FROM t WHERE flag = 0 AND x >= 50 AND x <> 60 AND "
+        "id IN (SELECT id FROM t VERSION AS OF 0)"
+    ).collect()[0]
+    assert res.affected_rows == 24  # even 50..98 but 60
+    left = {r.id for r in st.read().filter("id >= 50").collect()}
+    assert left == {60, *range(51, 100, 2), 100, 101, 102, 103, 104}
+
+
+def test_subquery_bodies_with_order_by_and_limit(spark, tmp_path):
+    """A query's ORDER BY / LIMIT nodes carry only those clauses' text;
+    the body sent to the catalog is still the whole query."""
+    st = _mk(spark, tmp_path / "t", n_segs=1)
+    q = _quarantine(spark, tmp_path / "q", [40, 10, 30, 20])
+    cat = LakeCatalog(spark)
+    cat.register("t", store=st)
+    cat.register("quarantine", store=q)
+    res = cat.sql(
+        "DELETE FROM t WHERE id IN "
+        "(SELECT id FROM quarantine ORDER BY id LIMIT 2)"
+    ).collect()[0]
+    assert res.affected_rows == 2
+    res = cat.sql(
+        "UPDATE t SET x = -1 WHERE flag = 0 AND x IN "
+        "(SELECT id FROM quarantine ORDER BY id DESC LIMIT 1) OR EXISTS "
+        "(SELECT id FROM quarantine WHERE id < 0 ORDER BY id LIMIT 1)"
+    ).collect()[0]
+    assert res.affected_rows == 1
+    assert {r.id for r in st.read().filter("id IN (10, 20)").collect()} == set()
+    assert [r.id for r in st.read().filter("x = -1").collect()] == [40]
