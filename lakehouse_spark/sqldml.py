@@ -123,7 +123,8 @@ def _column(n: dict, j=None) -> str | None:
 
 # Expression nodes whose recorded origin covers exactly their own text. A
 # predicate's origin starts at its keyword (IN, BETWEEN, LIKE, IS ...),
-# after its left operand, so other nodes extend to their first child.
+# after its left operand, so other nodes extend to their first child. The
+# inner AND/OR nodes of a chain are the exception (see _render).
 _WHOLE_SPAN = {
     "And", "Or", "EqualTo", "LessThan", "LessThanOrEqual", "GreaterThan",
     "GreaterThanOrEqual", "UnresolvedAttribute", "Literal",
