@@ -9,8 +9,9 @@ The grammar is Spark's own: each statement is parsed once by the
 session's SQL parser, read back with one ``toJSON()`` call and routed on
 the plan node. Text the store needs (the WHERE, SET values, MERGE
 conditions, subquery bodies) is sliced from the statement at the parser's
-recorded origin of the node that carries it, so quoting, comments and
-nesting are the parser's business.
+recorded origin of the node that carries it (for a query body, the
+earliest origin in its plan), so quoting, comments and nesting are the
+parser's business.
 
 - ``InsertIntoStatement`` (``INSERT INTO|OVERWRITE [TABLE] name [(cols)]
   VALUES ... | SELECT ... | TABLE src``) → ``append`` / ``overwrite``
